@@ -14,7 +14,9 @@ package graft
   *
   * A warmup action runs first so JVM/classloader/codegen startup cost
   * isn't attributed to the first query; each query is then timed as a
-  * full plan → action (`count`) pass. */
+  * full plan → action pass into the `noop` sink, which runs the whole
+  * projection (a `count()` lets Catalyst prune the output columns)
+  * without collecting rows to the driver. */
 object Bench {
 
   /** JSON string literal with full escaping (quote, backslash, control
@@ -118,6 +120,11 @@ object Bench {
     * inside the driver's tail window. */
   private val MaxOverlapOnStdout = 10
 
+  /** How many failed queries (and how many chars of each root cause)
+    * ride the stdout line; the full map lives in the detail artifact. */
+  private val MaxErrorsOnStdout = 3
+  private val MaxErrorCharsOnStdout = 80
+
   /** The driver-facing stdout line: total, host calibration, oracle
     * ratio, and the [[TopQueriesOnStdout]] slowest queries. Queries
     * whose wall overlapped the concurrent memo-fill phase are NAMED
@@ -125,14 +132,16 @@ object Bench {
     * slowest first, capped) — their walls absorb fill contention, so
     * a per-query diff against them is noise, not a plan regression
     * (the round-12 sf10 artifact read +84 s on etl_zscore_outliers
-    * for exactly this reason). Kept a pure function so BenchSpec can
+    * for exactly this reason). Failed queries are counted in `failed`
+    * and the first few (by name) named in `query_errors` with a
+    * truncated root cause. Kept a pure function so BenchSpec can
     * bound its size. */
   def compactLine(total: Double, sfDir: String,
                   calib: Option[Calib] = None,
                   oracle: Option[Double] = None,
                   results: Seq[(String, Double)] = Nil,
-                  lanes: Int = 1,
-                  fillOverlap: Set[String] = Set.empty): String = {
+                  fillOverlap: Set[String] = Set.empty,
+                  queryErrors: Map[String, String] = Map.empty): String = {
     // "sf0.1" → 0.1; anything unparseable becomes an ESCAPED string
     val base = sfDir.split('/').last
     val sf = base.stripPrefix("sf")
@@ -150,15 +159,18 @@ object Bench {
       .take(MaxOverlapOnStdout)
     val ovJson =
       if (ov.isEmpty) "" else ov.mkString(""""fill_overlap":[""", ",", "],")
-    s"""{"metric":"total","value":$total,"unit":"sec",$cal${oracleJson(total, oracle)}$qs$ovJson${lanesJson(lanes)}"sf":$sfJson}"""
+    val errJson =
+      if (queryErrors.isEmpty) ""
+      else s""""failed":${queryErrors.size},""" +
+        errorsJson(queryErrors.toSeq.sortBy(_._1).take(MaxErrorsOnStdout)
+          .map { case (k, v) => k -> v.take(MaxErrorCharsOnStdout) }) + ","
+    s"""{"metric":"total","value":$total,"unit":"sec",$cal${oracleJson(total, oracle)}$qs$ovJson$errJson"sf":$sfJson}"""
   }
 
-  /** Concurrency disclosure: when the suite ran in >1 lane (engine
-    * AND oracle — both sides get the same knob), the artifact says
-    * so. Omitted at lanes=1, where the walk is the old sequential
-    * one. */
-  private def lanesJson(lanes: Int): String =
-    if (lanes > 1) s""""lanes":$lanes,""" else ""
+  /** `"query_errors":{name: root cause, ...}`. */
+  private def errorsJson(errs: Seq[(String, String)]): String =
+    errs.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
+      .mkString(""""query_errors":{""", ",", "}")
 
   /** The 2× gate as ONE field pair: the DuckDB oracle's same-boot
     * wall over the identical inventory, and total/oracle. Round after
@@ -210,7 +222,9 @@ object Bench {
     * query vs the prior artifact (empty when none was found), and
     * `spill` is the suite-wide (memoryBytesSpilled, diskBytesSpilled)
     * from stage metrics — zero on a healthy in-memory run, nonzero
-    * under deliberate memory-pressure probes (§8g). */
+    * under deliberate memory-pressure probes (§8g). `queryErrors` is
+    * the root cause of every failed query; a failed query has no
+    * entry in `results` or `builds`. */
   def detailLine(total: Double, results: Seq[(String, Double)], sfDir: String,
                  fills: Seq[(String, Double)] = Nil,
                  calib: Option[Calib] = None,
@@ -218,11 +232,11 @@ object Bench {
                  deltas: Seq[(String, Double)] = Nil,
                  spill: Option[(Long, Long)] = None,
                  oracle: Option[Double] = None,
-                 lanes: Int = 1,
                  fillOverlap: Seq[String] = Nil,
                  oracleQueries: Seq[(String, Double)] = Nil,
                  spillBy: Seq[(String, (Long, Long))] = Nil,
-                 builds: Seq[(String, Double)] = Nil): String = {
+                 builds: Seq[(String, Double)] = Nil,
+                 queryErrors: Map[String, String] = Map.empty): String = {
     val qs = results.map { case (k, v) => jsonStr(k) + ":" + v }
       .mkString("{", ",", "}")
     val fl = fills.map { case (k, v) => jsonStr(k) + ":" + v }
@@ -257,7 +271,8 @@ object Bench {
       if (builds.isEmpty) ""
       else builds.map { case (k, v) => jsonStr(k) + ":" + v }
         .mkString(""""build":{""", ",", "},")
-    s"""{"metric":"total","value":$total,"unit":"sec",$cal$sp$spb${oracleJson(total, oracle)}${lanesJson(lanes)}"queries":$qs,$bd"fills":$fl,"fill_errors":$fe,"delta":$dl,"fill_overlap":$ov,"oracle_queries":$oq,"sf":${jsonStr(sfDir)}}"""
+    val qe = errorsJson(queryErrors.toSeq.sortBy(_._1))
+    s"""{"metric":"total","value":$total,"unit":"sec",$cal$sp$spb${oracleJson(total, oracle)}"queries":$qs,$bd$qe,"fills":$fl,"fill_errors":$fe,"delta":$dl,"fill_overlap":$ov,"oracle_queries":$oq,"sf":${jsonStr(sfDir)}}"""
   }
 
   /** Run the DuckDB oracle suite (tools/time_oracle.py, the driver-
@@ -270,15 +285,15 @@ object Bench {
     * SPARK_GRAFT_BENCH_ORACLE=0 (e.g. at sf10, where the oracle
     * needs a capacity-tuned staged run — see tools/selfcheck.py). */
   def timeOracle(sfDir: String, threads: Int,
-                 boundSec: Long = 7200, lanes: Int = 1): Option[Double] =
-    timeOracleDetailed(sfDir, threads, boundSec, lanes).map(_._1)
+                 boundSec: Long = 7200): Option[Double] =
+    timeOracleDetailed(sfDir, threads, boundSec).map(_._1)
 
   /** [[timeOracle]] plus the per-query oracle walls parsed from the
     * tool's streamed progress lines (`<sec>  <name>`) — the detail
     * artifact publishes them so the 2× suite gate decomposes into
     * per-query ratios without a second oracle run. */
   def timeOracleDetailed(sfDir: String, threads: Int,
-                         boundSec: Long = 7200, lanes: Int = 1)
+                         boundSec: Long = 7200)
       : Option[(Double, Seq[(String, Double)])] = {
     val tool = new java.io.File("tools/time_oracle.py")
     if (!tool.isFile) return None
@@ -290,11 +305,6 @@ object Bench {
       java.nio.file.Files.writeString(dir.resolve("oracle_sql.json"), json)
       val pb = new ProcessBuilder("python3", tool.getAbsolutePath,
         sfDir, dir.toString, threads.toString)
-      // same concurrency model on both sides of the ratio: the oracle
-      // overlaps queries in the same number of lanes as the engine
-      // (DuckDB cursors share one database + thread pool, exactly as
-      // the lanes share one Spark scheduler)
-      pb.environment().put("ORACLE_LANES", lanes.toString)
       pb.redirectErrorStream(true)
       val p = pb.start()
       val buf = new java.lang.StringBuilder
@@ -323,10 +333,11 @@ object Bench {
   }
 
   /** Per-query oracle walls from time_oracle.py's streamed progress
-    * lines (`<sec>  <name>`, one per query). Interleaved/garbled
-    * lines (lanes>1 writes from several threads) simply fail the
-    * match and are skipped — the per-query map is a diagnostic, the
-    * summary ORACLE_TOTAL line is the contract. */
+    * lines (`<sec>  <name>`, one per query). Any other line (the
+    * ORACLE_TOTAL summary, with or without the `lanes=1` suffix of
+    * older logs, or a garbled one) fails the match and is skipped —
+    * the per-query map is a diagnostic, the summary ORACLE_TOTAL line
+    * is the contract. */
   private[graft] def parseOraclePerQuery(text: String): Seq[(String, Double)] =
     "(?m)^\\s*([0-9]+\\.[0-9]+)\\s+(\\S+)\\s*$".r
       .findAllMatchIn(text)
@@ -337,7 +348,7 @@ object Bench {
     * eviction and shuffle spill both land here). Per-label
     * attribution (round-12 verdict item 4): stages map to the job
     * description each query/fill sets ([[main]] labels queries `q:*`
-    * and Memo.runFills labels fills `fill:*`), so the suite-wide
+    * and Memo.fill labels fills `fill:*`), so the suite-wide
     * total decomposes into the stages that actually spilled. */
   final class SpillListener extends org.apache.spark.scheduler.SparkListener {
     private val mem = new java.util.concurrent.atomic.AtomicLong
@@ -377,6 +388,53 @@ object Bench {
     }
   }
 
+  /** The queries that read only base tables — the memo-free
+    * modules' inventories, timed while [[Memo.fill]] runs in the
+    * background. Declared by module, not guessed from name prefixes;
+    * BenchSpec asserts that constructing every one of them leaves a
+    * cleared session with zero memo cells. */
+  private[graft] def lightQueries: Set[String] = {
+    import graft.operators.{EtlOps, IngestOps, ReferencePipeline,
+      RelationalOps, Upsert}
+    RelationalOps.queries.keySet ++ EtlOps.queries.keySet ++
+      IngestOps.queries.keySet ++ ReferencePipeline.queries.keySet ++
+      Upsert.queries.keySet
+  }
+
+  /** Time each query in order on the calling thread: build the
+    * DataFrame, then run it in full into the `noop` sink. Returns
+    * (name, startNanos, buildSeconds, wallSeconds) per query that
+    * succeeded — the start stamp drives the fill-overlap flag, and
+    * wall − build is execution — plus the root cause (class, message,
+    * top frame) of every query that failed, whose wall is no
+    * timing. */
+  private[graft] def timeQueries(
+      spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      qs: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)])
+      : (Seq[(String, Long, Double, Double)], Map[String, String]) = {
+    val errors = Map.newBuilder[String, String]
+    val timed = qs.flatMap { case (name, build) =>
+      // thread-local label (guide §1.5): the UI and the spill
+      // listener attribute this query's stages to it
+      spark.sparkContext.setJobDescription(s"q:$name")
+      val t0 = System.nanoTime()
+      try {
+        val df = build(spark, sfDir)
+        val tb = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        Some((name, t0, (tb - t0) / 1e9, (System.nanoTime() - t0) / 1e9))
+      } catch { case t: Throwable =>
+        val cause = Memo.describe(t)
+        System.err.println(s"[bench] query '$name' FAILED — $cause")
+        errors += name -> cause
+        None
+      }
+    }
+    spark.sparkContext.setJobDescription(null)
+    (timed, errors.result())
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -410,93 +468,19 @@ object Bench {
     // Pipelined fill: the shared memo relations materialize on a
     // background thread WHILE the memo-free query families run (the
     // reference-ETL and relational/OLAP inventories read only the
-    // base tables — RelationalOps/EtlOps contain no Memo call sites;
-    // the four GraphOps q_* queries do, so they run in the post-fill
-    // phase). The fill is still fully paid and fully measured — it
-    // just no longer serializes ahead of ~80 s of queries that never
-    // touch it, exactly as a production engine warms caches behind
-    // live traffic. Memo's atomic Cell makes a mid-fill memo read
-    // safe (the reader blocks on the in-flight build, MemoSpec), so
-    // a misclassified query costs timing noise, never correctness.
-    // Per-fill entries in the artifact are measured under this
-    // concurrency (profiling hints); `total` is the true phase WALL
-    // from fill start to last query end — what a rerun reproduces.
-    val memoQueriesInLightNames = Set("q_pagerank_supplier", "q_bfs_hops",
-      "q_triangle_count", "q_degree_dist")
+    // base tables — [[lightQueries]], a contract BenchSpec checks by
+    // constructing them in a cleared session). The fill is still
+    // fully paid and fully measured — it just no longer serializes
+    // ahead of ~80 s of queries that never touch it, exactly as a
+    // production engine warms caches behind live traffic. Memo's
+    // atomic Cell makes a mid-fill memo read safe (the reader blocks
+    // on the in-flight build, MemoSpec), so a misclassified query
+    // costs timing noise, never correctness. Per-fill entries in the
+    // artifact are measured under this concurrency (profiling hints);
+    // `total` is the true phase WALL from fill start to last query
+    // end — what a rerun reproduces.
     val (light, heavy) = SparkEntry.queries.toSeq.sortBy(_._1)
-      .partition { case (n, _) =>
-        (n.startsWith("etl_") || n.startsWith("q") ||
-          n.startsWith("ingest_")) && !memoQueriesInLightNames(n) }
-    // Concurrent query lanes (opt-in diagnostic, DEFAULT 1): N worker
-    // threads drain one work queue, each timing its own queries (wall
-    // under concurrency). At toy SF a single tiny query leaves ~31 of
-    // local[32]'s slots idle, so overlapping queries is how a
-    // production deployment would serve this inventory — but the
-    // published ratio must compare EQUAL methodologies, and the r12
-    // measurement (SURVEY §7l) shows the DuckDB oracle gains MORE
-    // from the same lanes than Spark does (sf0.1: engine 170.8→77.3 s
-    // at 1→4 lanes; oracle 92.6→36.8 s, degrading again past 4), so
-    // every symmetric lane count worsens the ratio (1.83 sequential →
-    // 2.10 at 4 lanes). The knob therefore stays at 1 for the gate
-    // and exists for operations/diagnostics; when raised, the oracle
-    // timer AUTOMATICALLY gets the same lane count (time_oracle.py
-    // ORACLE_LANES, cursors on one DuckDB database) and both lines
-    // disclose it (`"lanes":N`). Lanes=1 reproduces the sequential
-    // walk exactly (per-query attribution uncontended).
-    val lanes = math.max(1, sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_LANES", "1").toInt)
-    // (name, startNanos, seconds): the start stamp drives the
-    // fill-overlap flag — a query that STARTED before the fill phase
-    // ended shared the box with fill work for part of its wall
-    def timed(qs: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)]): Seq[(String, Long, Double, Double)] = {
-      val queue = new java.util.concurrent.ConcurrentLinkedQueue[
-        (String, (org.apache.spark.sql.SparkSession, String) =>
-          org.apache.spark.sql.DataFrame)]
-      // lanes > 1: longest-processing-time-first off the prior round's
-      // timings (classic LPT) — a 6 s store fold queued last would
-      // otherwise straggle the whole phase behind one lane. Unknown
-      // queries (no baseline) keep their alphabetical position via
-      // 0.0. The sequential walk keeps its stable alphabetical order
-      // (LPT would also reshuffle which queries overlap the fill).
-      val ordered =
-        if (lanes == 1) qs
-        else qs.sortBy { case (n, _) => -prev.getOrElse(n, 0.0) }
-      ordered.foreach(queue.add)
-      val out = new java.util.concurrent.ConcurrentLinkedQueue[
-        (String, Long, Double, Double)]
-      def drain(): Unit = {
-        var q = queue.poll()
-        while (q != null) {
-          // thread-local label (guide §1.5): the UI and the spill
-          // listener attribute this query's stages to it
-          spark.sparkContext.setJobDescription(s"q:${q._1}")
-          val t0 = System.nanoTime()
-          // the per-query wall is UNCHANGED (t0 → post-count); the
-          // intermediate stamp decomposes it into BUILD (DataFrame
-          // construction + any construction-time driver probes) vs
-          // EXEC for the artifact's `build` map (r14, VERDICT item 4
-          // — the per-query floor decomposition)
-          var tb = t0
-          try {
-            val df = q._2(spark, sfDir)
-            tb = System.nanoTime()
-            df.count()
-          } catch { case _: Throwable => }
-          out.add((q._1, t0, (tb - t0) / 1e9, (System.nanoTime() - t0) / 1e9))
-          q = queue.poll()
-        }
-        spark.sparkContext.setJobDescription(null)
-      }
-      if (lanes == 1) drain()
-      else {
-        val threads = (1 to lanes).map(i => new Thread(() => drain(),
-          s"bench-lane-$i"))
-        threads.foreach(_.start()); threads.foreach(_.join())
-      }
-      import scala.jdk.CollectionConverters._
-      out.asScala.toSeq
-    }
+      .partition { case (n, _) => lightQueries.contains(n) }
     val wallT0 = System.nanoTime()
     val fillEnd = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
     // DAEMON fill thread + explicit shutdown: the default
@@ -516,11 +500,12 @@ object Bench {
         f
       }(ExecutionContext.fromExecutor(fillPool))
     }
-    val lightResults = timed(light)
+    val (lightResults, lightErrors) = timeQueries(spark, sfDir, light)
     val fills = scala.concurrent.Await.result(fillFut,
       scala.concurrent.duration.Duration.Inf)
     fillPool.shutdown()
-    val heavyResults = timed(heavy)
+    val (heavyResults, heavyErrors) = timeQueries(spark, sfDir, heavy)
+    val queryErrors = lightErrors ++ heavyErrors
     val timedAll = (lightResults ++ heavyResults).sortBy(_._1)
     val results = timedAll.map { case (n, _, _, s) => (n, s) }
     val builds = timedAll.map { case (n, _, b, _) => (n, b) }
@@ -538,21 +523,22 @@ object Bench {
     // fork then contends with an idle session, not the timed queries)
     val oracleDetail =
       if (sys.env.get("SPARK_GRAFT_BENCH_ORACLE").contains("0")) None
-      else timeOracleDetailed(sfDir, cpus, lanes = lanes)
+      else timeOracleDetailed(sfDir, cpus)
     val oracle = oracleDetail.map(_._1)
     val oracleQueries = oracleDetail.map(_._2).getOrElse(Nil)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
       detailLine(total, results, sfDir, fills, calib, Memo.fillErrors,
-        deltaMap(results, prev), Some(spill.snapshot), oracle, lanes,
-        overlapped, oracleQueries, spill.topSpillers(16), builds) + "\n")
+        deltaMap(results, prev), Some(spill.snapshot), oracle,
+        overlapped, oracleQueries, spill.topSpillers(16), builds,
+        queryErrors) + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}") }
     Memo.clear(spark)
     // the compact line is the LAST thing on stdout (after Spark's
     // shutdown chatter goes to stderr via log4j) so even a short tail
     // window catches an intact parseable line
-    println(compactLine(total, sfDir, calib, oracle, results, lanes,
-      overlapped.toSet))
+    println(compactLine(total, sfDir, calib, oracle, results,
+      overlapped.toSet, queryErrors))
     spark.stop()
   }
 }

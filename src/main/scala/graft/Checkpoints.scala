@@ -12,8 +12,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * blocks accumulate on executors between GCs, invisible to
   * [[Memo.clear]] (which unpersists only what the memo itself
   * persisted). Every checkpoint therefore goes through [[eager]],
-  * which registers the materialized RDD under its session; a
-  * [[Memo.clear]] hook then unpersists all of them explicitly.
+  * which registers the materialized RDD under its session;
+  * [[Memo.clear]] then unpersists all of them explicitly, after
+  * dropping the memo cells that held them.
   *
   * Registered handles are WEAK references: while a consumer still
   * holds the checkpointed DataFrame (whose plan holds the RDD
@@ -33,8 +34,6 @@ object Checkpoints {
   private val live = scala.collection.mutable.ListBuffer
     .empty[(SparkSession, WeakReference[org.apache.spark.rdd.RDD[_]])]
 
-  Memo.registerClearHook("checkpoints")(release)
-
   /** `df.localCheckpoint()` + registration for explicit release. */
   def eager(df: DataFrame): DataFrame = {
     val out = df.localCheckpoint()
@@ -52,7 +51,7 @@ object Checkpoints {
   /** Unpersist every still-reachable registered checkpoint RDD of `s`
     * (non-blocking — the blocks drop asynchronously, the handles drop
     * now; GC-cleared handles were already reclaimed by the
-    * ContextCleaner). Runs as a Memo.clear hook, with the
+    * ContextCleaner). Called by [[Memo.clear]], with the
     * locally-checkpointed-RDD unpersist warning silenced for exactly
     * this scope — release only ever runs after the checkpoints'
     * consumers are done (Memo.clear concurrent with in-flight queries

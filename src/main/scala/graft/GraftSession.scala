@@ -14,7 +14,7 @@ object GraftSession {
 
   /** FAIR-scheduler allocation file, written once per JVM: queries
     * (the `default` pool) hold a 1000:1 weight plus a full minShare
-    * over background work (the `fill` pool — Memo.fill's lanes tag
+    * over background work (the `fill` pool — Memo.fill's threads tag
     * themselves into it via a thread-local, see [[Memo.fill]]). On a
     * shared cluster this is the standard interactive-vs-batch pool
     * split; locally it keeps cache warmup from inflating live query
@@ -33,15 +33,16 @@ object GraftSession {
         |    <minShare>2147483647</minShare>
         |  </pool>
         |  <pool name="fill">
-        |    <!-- FAIR WITHIN the pool (r13): the fill phase runs ~14
-        |         independent lanes, each a chain of small-stage jobs.
-        |         Under FIFO, every lane's next job queued behind the
-        |         whole pool's backlog, serializing the phase — the
-        |         sf10 fill wall measured ≈ the SUM of the lanes
-        |         (387 s) with the store-lifecycle chain stretched
-        |         11x its solo wall. Round-robin sharing lets every
-        |         lane progress concurrently; queries still preempt
-        |         the whole pool 1000:1. -->
+        |    <!-- FAIR WITHIN the pool (r13): the fill phase runs
+        |         every fill on its own thread at once, each a chain
+        |         of small-stage jobs. Under FIFO, every fill's next
+        |         job queued behind the whole pool's backlog,
+        |         serializing the phase — the sf10 fill wall measured
+        |         ≈ the SUM of the chains (387 s) with the
+        |         store-lifecycle chain stretched 11x its solo wall.
+        |         Round-robin sharing lets every fill progress
+        |         concurrently; queries still preempt the whole pool
+        |         1000:1. -->
         |    <schedulingMode>FAIR</schedulingMode>
         |    <weight>1</weight>
         |    <minShare>0</minShare>

@@ -19,8 +19,8 @@ object Tables {
     * re-infers the schema from parquet footers — driver-side,
     * single-threaded work that every one of the 240 queries paid per
     * table reference (~the largest share of the ~0.2 s per-query
-    * "build" floor measured by tools/QueryFloor). The resolved
-    * DataFrame handle is immutable plan state (no cached data blocks,
+    * "build" floor: the construct layer of a traced perfbench run).
+    * The resolved DataFrame handle is immutable plan state (no cached data blocks,
     * so Memo.clear/MemSoak semantics are untouched) and the test
     * tables are immutable per (dir, name), so one resolution per
     * session serves every consumer. On a catalog-backed cluster the

@@ -667,16 +667,9 @@ object AnnOps {
   private def annCorpus(s: SparkSession, d: String): DataFrame =
     DedupOps.embParallel(s, d)
 
-  // one count job per (session, dataset), not one per memo builder;
-  // emptied with the memo so a cleared session fully rebuilds
-  private val cellCounts =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-  graft.Memo.registerClearHook("ann_cell_counts") { s =>
-    cellCounts.keys.filter(_._1 eq s).foreach(cellCounts.remove)
-  }
-
+  // one count job per (session, dataset), not one per memo builder
   private def annN(s: SparkSession, d: String): Long =
-    cellCounts.getOrElseUpdate((s, d), annCorpus(s, d).count())
+    graft.Memo.value(s, "ann_n", d)(annCorpus(s, d).count())
 
   private def annCells(s: SparkSession, d: String): Int =
     math.max(4, math.sqrt(annN(s, d).toDouble).toInt)
@@ -695,29 +688,21 @@ object AnnOps {
       coarseAssign(annCorpus(s, d), annCents(s, d)))
 
   /** The ANN model pieces (training sample → coarse centroids →
-    * assignment → PQ codebooks → PQ codes), in dependency order —
-    * consumed by [[graft.Memo.fill]]. embeddings_par is filled by the
-    * dedup family ahead of these. */
-  private[graft] def memoFillLanes(s: SparkSession, d: String)
-      : Seq[Seq[(String, () => Unit)]] = Seq(
-    // the IVF/IVFPQ model chain is one real dependency chain; the
-    // solo-PQ, SQ8, binary-signature and covariance relations each
-    // read only the base corpus and train/encode independently
-    Seq("ann_train" -> (() => { annTrain(s, d).count(); () }),
-        "ann_cents" -> (() => { annCents(s, d).count(); () }),
-        "ann_assigned" -> (() => { annAssigned(s, d).count(); () }),
-        "ann_trainres" -> (() => { annTrainRes(s, d).count(); () }),
-        "ann_pqcents" -> (() => { annPqCents(s, d).count(); () }),
-        "ann_pqcodes" -> (() => { annPqCodes(s, d).count(); () })),
-    Seq("pq_cents" -> (() => { pqSoloCents(s, d).count(); () }),
-        "pq_codes" -> (() => { pqSoloCodes(s, d).count(); () })),
-    Seq("sq8_codes" -> (() => { sq8Codes(s, d).count(); () })),
-    Seq("bin_sigs" -> (() => { binSigs(s, d).count(); () })),
-    Seq("cov_base" -> (() => { covarianceBase(s, d).count(); () })))
-
-  /** Flat dependency-order view of [[memoFillLanes]]. */
-  private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] =
-    memoFillLanes(s, d).flatten
+    * assignment → PQ codebooks → PQ codes, plus the solo-PQ, SQ8,
+    * binary-signature and covariance relations over the base corpus)
+    * — consumed by [[graft.Memo.fill]]. */
+  private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
+    "ann_train" -> (() => { annTrain(s, d).count(); () }),
+    "ann_cents" -> (() => { annCents(s, d).count(); () }),
+    "ann_assigned" -> (() => { annAssigned(s, d).count(); () }),
+    "ann_trainres" -> (() => { annTrainRes(s, d).count(); () }),
+    "ann_pqcents" -> (() => { annPqCents(s, d).count(); () }),
+    "ann_pqcodes" -> (() => { annPqCodes(s, d).count(); () }),
+    "pq_cents" -> (() => { pqSoloCents(s, d).count(); () }),
+    "pq_codes" -> (() => { pqSoloCodes(s, d).count(); () }),
+    "sq8_codes" -> (() => { sq8Codes(s, d).count(); () }),
+    "bin_sigs" -> (() => { binSigs(s, d).count(); () }),
+    "cov_base" -> (() => { covarianceBase(s, d).count(); () }))
 
   // ---- shared SQL mirror builders (ONE copy each: the ivf/pq/ivfpq
   // ---- mirrors must stay bit-identical, so the deterministic-fold

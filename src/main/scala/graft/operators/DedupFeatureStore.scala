@@ -820,50 +820,19 @@ object DedupFeatureStore {
   private case class LifecycleBase(postAPath: String, v1: DataFrame,
                                    featB: Features)
 
-  // At-most-once future cell, NOT TrieMap.getOrElseUpdate: a double
-  // evaluation here is not the harmless wasted recompute of the other
-  // session caches — both thunks would fold into the SAME postA
-  // working directory (delete + copy + generation-locked fold), so a
-  // concurrent second builder corrupts the store or trips the
-  // generation lock. Concurrent bench lanes make the two registered
-  // lifecycle queries genuinely concurrent callers.
-  private val lifecycleCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    java.util.concurrent.CompletableFuture[LifecycleBase]]
-  locally {
-    graft.Memo.registerClearHook("dedup_store_lifecycle") { s =>
-      import scala.jdk.CollectionConverters._
-      lifecycleCache.keySet.asScala.filter(_._1 eq s)
-        .toList.foreach(lifecycleCache.remove)
-    }
-  }
-
   private def step(n: Int, v: DataFrame): DataFrame =
     v.select(lit(n).as("ingest_step"), col("doc_id"), col("status"),
       col("hit_id"), col("jaccard"))
 
-  private def lifecycleBase(s: SparkSession, d: String): LifecycleBase = {
-    val fresh = new java.util.concurrent.CompletableFuture[LifecycleBase]
-    val prev = lifecycleCache.putIfAbsent((s, d), fresh)
-    if (prev != null)
-      // loser waits on the one build; unwrap join()'s
-      // CompletionException so waiters observe the builder's ORIGINAL
-      // exception type, same as the builder thread (round-12 ADVICE)
-      try return prev.join()
-      catch { case e: java.util.concurrent.CompletionException
-          if e.getCause != null => throw e.getCause }
-    try {
-      val built = buildLifecycleBase(s, d)
-      fresh.complete(built)
-      built
-    } catch { case e: Throwable =>
-      // a failed build must not poison the session: drop the cell so a
-      // later caller retries, and propagate to every current waiter
-      fresh.completeExceptionally(e)
-      lifecycleCache.remove((s, d), fresh)
-      throw e
-    }
-  }
+  // An at-most-once Memo cell, not a recompute-on-race cache: a double
+  // evaluation here is not a harmless wasted recompute — both builds
+  // would fold into the SAME postA working directory (delete + copy +
+  // generation-locked fold), so a concurrent second builder corrupts
+  // the store or trips the generation lock. A failed build is dropped
+  // and retried by the next caller; waiters see its original
+  // exception type.
+  private def lifecycleBase(s: SparkSession, d: String): LifecycleBase =
+    graft.Memo.value(s, "dedup_store_lifecycle", d)(buildLifecycleBase(s, d))
 
   private def buildLifecycleBase(s: SparkSession, d: String): LifecycleBase = {
       val docs = DedupOps.docsParallel(s, d).select("doc_id", "text")

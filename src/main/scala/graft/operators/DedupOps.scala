@@ -346,7 +346,7 @@ object DedupOps {
     * shingle row 64× into (doc, perm, h) rows before a (doc, perm)
     * min — the row machinery around each modmul (struct alloc, row
     * copy, per-row agg probe) cost ~200 ns × 64 × |shingle instances|
-    * and was 85% of the store-lifecycle lane's CPU at sf10 (980
+    * and was 85% of the store-lifecycle fill's CPU at sf10 (980
     * task-seconds for the seed slice alone; the 2.5 G modmuls
     * themselves are ~5 s of raw ALU on 32 cores). The wide aggregate
     * stays inside whole-stage codegen by the same
@@ -1280,31 +1280,18 @@ object DedupOps {
        |  ON a.rep_id = b.rep_id AND a.vec_id < b.vec_id""".stripMargin
   }
 
-  /** The cross-family base scans — filled FIRST (VocabOps' tokenize
-    * pass builds on documents_par; the dedup chain then builds on
-    * that tokenize pass). Consumed by [[graft.Memo.fill]]. */
-  private[graft] def memoFillsBase(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
+  /** This family's shared memoized relations — the cross-family base
+    * scans (documents_par, embeddings_par) and the dedup candidate
+    * chains — consumed by [[graft.Memo.fill]]. */
+  private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
     "documents_par" -> (() => { docsParallel(s, d).count(); () }),
-    "embeddings_par" -> (() => { embParallel(s, d).count(); () }))
-
-  /** The dedup candidate chains as INDEPENDENT fill lanes (within a
-    * lane order is a real dependency; across lanes only the shared
-    * shingle/tokenize cells couple them, and the atomic Memo cell
-    * makes a cross-lane first-toucher build them exactly once).
-    * Filled after [[memoFillsBase]]; the VocabOps tokenize lane
-    * normally wins the doc_toks build. */
-  private[graft] def memoFillLanes(s: SparkSession, d: String)
-      : Seq[Seq[(String, () => Unit)]] = Seq(
-    Seq("shingle_sets" -> (() => { shingleSets(s, d).count(); () }),
-        "ngram_inter" -> (() => { ngramInter(s, d).count(); () }),
-        "ngram_jaccard" -> (() => { ngramJaccard(s, d).count(); () })),
-    Seq("minhash_banded" -> (() => { minhashBanded(s, d).count(); () }),
-        "minhash_cand" -> (() => { minhashCandidates(s, d).count(); () })),
-    Seq("simhash_sigs" -> (() => { simhashSigsMemo(s, d); () })))
-
-  /** Flat dependency-order view of [[memoFillLanes]]. */
-  private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] =
-    memoFillLanes(s, d).flatten
+    "embeddings_par" -> (() => { embParallel(s, d).count(); () }),
+    "shingle_sets" -> (() => { shingleSets(s, d).count(); () }),
+    "ngram_inter" -> (() => { ngramInter(s, d).count(); () }),
+    "ngram_jaccard" -> (() => { ngramJaccard(s, d).count(); () }),
+    "minhash_banded" -> (() => { minhashBanded(s, d).count(); () }),
+    "minhash_cand" -> (() => { minhashCandidates(s, d).count(); () }),
+    "simhash_sigs" -> (() => { simhashSigsMemo(s, d); () }))
 
   /** Memo-cached parallelized scans shared across the dedup/ANN
     * family (one compute per dataset per process). */

@@ -306,20 +306,12 @@ object GraphOps {
 
   private val KnnPartners = 8
 
-  /** This family's shared memoized relation — consumed by
+  /** This family's shared memoized relations — consumed by
     * [[graft.Memo.fill]]. */
-  private[graft] def memoFillLanes(s: SparkSession, d: String)
-      : Seq[Seq[(String, () => Unit)]] = Seq(
-    // order_supps leads the assoc lane (its owner); bipartite_pairs
-    // reads it cross-lane, which the atomic Memo cell serializes
-    // one-directionally (allowed by the fill-lane invariant)
-    Seq("order_supps" -> (() => { orderSupps(s, d).count(); () }),
-      "assoc_edges" -> (() => { assocEdges(s, d).count(); () })),
-    Seq("bipartite_pairs" -> (() => { bipartitePairs(s, d).count(); () })))
-
-  /** Flat view of [[memoFillLanes]]. */
-  private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] =
-    memoFillLanes(s, d).flatten
+  private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
+    "order_supps" -> (() => { orderSupps(s, d).count(); () }),
+    "assoc_edges" -> (() => { assocEdges(s, d).count(); () }),
+    "bipartite_pairs" -> (() => { bipartitePairs(s, d).count(); () }))
 
   /** Canonical top-K association edge set (u < v, deduped,
     * localCheckpointed) — shared by the triangle census and the

@@ -520,8 +520,8 @@ object MultimodalOps {
   def dedupPhash(s: SparkSession, d: String): DataFrame =
     DedupOps.hammingPairs(phashSigsMemo(s, d), PhashBucketCap)
 
-  /** Bench/Verify fill hook (one lane: the shared decode sweep, then
-    * the semantic verdict built over it). */
+  /** Bench/Verify fill hook: the shared decode sweep, the semantic
+    * verdict built over it, and the phash cluster map. */
   private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
     "media_feats" -> (() => { mediaFeatsMemo(s, d); () }),
     "mm_semantic" -> (() => { mmSemantic(s, d).count(); () }),

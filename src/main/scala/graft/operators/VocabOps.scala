@@ -1044,13 +1044,12 @@ object VocabOps {
     * training pass is also the production shape (you train a
     * tokenizer once, then read its artifacts). Each step's words and
     * best-pair row are eagerly checkpointed (vocab-bounded, a few
-    * MB), the cache entry drops on [[graft.Memo.clear]] exactly like
-    * the memoized relations. A query racing the fill rebuilds
-    * harmlessly (pure derivation, deterministic values) — post-fill
-    * consumers always hit. */
+    * MB); the chain is a [[graft.Memo.value]], so a query racing the
+    * fill waits on the one training pass, and [[graft.Memo.clear]]
+    * drops it and releases its checkpoints. */
   private[graft] def bpeChain(s: SparkSession,
                               d: String): (DataFrame, DataFrame) =
-    bpeChainCache.getOrElseUpdate((s, d), {
+    graft.Memo.value(s, "bpe_chain", d) {
       val w0 = tokenFreq(s, d).select(col("token"),
         regexp_replace(col("token"), "(.)", " $1 ").as("enc"), col("freq"))
       val (stepRows, wordRows, _) = (1 to BpeSteps).foldLeft(
@@ -1068,15 +1067,7 @@ object VocabOps {
             col("enc"), col("freq")), merged)
       }
       (stepRows.reduce(_ unionAll _), wordRows.reduce(_ unionAll _))
-    })
-
-  private val bpeChainCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-  locally {
-    graft.Memo.registerClearHook("bpe_chain") { s =>
-      bpeChainCache.keys.filter(_._1 eq s).foreach(bpeChainCache.remove)
     }
-  }
 
   /** Production entry: learn `steps` merges over the corpus token
     * frequencies. Identical chain to the registered probe, just a

@@ -191,6 +191,52 @@ class BenchSpec extends AnyFunSuite {
     assert(parsed == Seq("ann_binary" -> 0.03, "dedup_embedding" -> 12.5))
   }
 
+  test("a failed query is named with its root cause and leaves no timing") {
+    val spark = TestSession.spark
+    val (timed, errors) = Bench.timeQueries(spark, TestSession.sf, Seq(
+      "ok_query" -> ((s, _) => s.range(3).toDF("x")),
+      "build_fails" -> ((_, _) =>
+        throw new IllegalStateException("planted build error")),
+      "exec_fails" -> ((s, _) =>
+        s.range(1).selectExpr("raise_error('planted exec error') AS y"))))
+    assert(timed.map(_._1) == Seq("ok_query"),
+      "a failed query's wall must not be published as a timing")
+    assert(errors.keySet == Set("build_fails", "exec_fails"))
+    assert(errors("build_fails").startsWith(
+      "java.lang.IllegalStateException: planted build error at "),
+      s"class, message and top frame expected: ${errors("build_fails")}")
+    assert(errors("exec_fails").contains("planted exec error"))
+    val results = timed.map { case (n, _, _, w) => n -> w }
+    val detail = Bench.detailLine(1.0, results, "/x/sf0.1",
+      queryErrors = errors)
+    assert(detail.contains(""""query_errors":{"build_fails":"java.lang.IllegalStateException: planted build error"""))
+    assert(Bench.detailLine(1.0, results, "/x/sf0.1")
+      .contains(""""query_errors":{}"""))
+    // stdout: the count plus a bounded sample, whatever fails
+    val many = (1 to 50).map(i => f"failed_query_$i%02d" -> ("x" * 500)).toMap
+    val line = Bench.compactLine(1.0, "/x/sf0.1", results = results,
+      queryErrors = many)
+    assert(line.contains(""""failed":50,"query_errors":{"failed_query_01":"""))
+    assert(!line.contains("failed_query_04"), "at most 3 names ride stdout")
+    assert(line.getBytes("UTF-8").length < 600, s"line too long: $line")
+    assert(line.endsWith(""""sf":0.1}"""))
+    assert(!Bench.compactLine(1.0, "/x/sf0.1").contains("failed"))
+  }
+
+  test("light queries construct without creating a memo cell") {
+    // the fill runs concurrently with the light queries: a light
+    // query that reads a memo key would time a fill wait, not itself
+    val spark = TestSession.spark
+    Memo.clear(spark)
+    val light = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => Bench.lightQueries(n) }
+    assert(light.size == Bench.lightQueries.size && light.size > 100)
+    val owners = light.collect { case (n, build)
+        if { build(spark, TestSession.sf); Memo.cellCount(spark) > 0 } =>
+      Memo.clear(spark); n }
+    assert(owners.isEmpty, s"light queries that own memo cells: $owners")
+  }
+
   test("strings with quotes/backslashes/control chars stay valid JSON") {
     val nasty = "a\"b\\c\nd\te"
     assert(Bench.jsonStr(nasty) == "\"a\\\"b\\\\c\\nd\\te\"")

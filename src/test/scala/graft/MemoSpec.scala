@@ -32,15 +32,23 @@ class MemoSpec extends AnyFunSuite {
     def load() = Memo.cached(spark, "memo_spec_clear", d) {
       builds += 1; spark.read.parquet(d + "/t.parquet")
     }
+    // a plain Memo.value cell drops with the DataFrame cells
+    var valueBuilds = 0
+    def value() = Memo.value(spark, "memo_spec_clear_value", d) {
+      valueBuilds += 1; valueBuilds
+    }
     val before = load()
     assert(load() eq before)
     assert(builds == 1)
+    assert(value() == 1 && value() == 1)
     Memo.clear(spark)
+    assert(Memo.cellCount(spark) == 0, "clear must drop every cell")
     assert(before.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "clear must unpersist cached entries")
     val after = load()
     assert(builds == 2, "cleared entry must rebuild on next access")
     assert(!(after eq before) && after.count() == 3)
+    assert(value() == 2, "cleared value must rebuild on next access")
   }
 
   test("fill materializes every shared relation once; refill is a cheap no-op") {
@@ -124,6 +132,18 @@ class MemoSpec extends AnyFunSuite {
     assert(captured.storageLevel ==
       org.apache.spark.storage.StorageLevel.NONE,
       "failed eager build must unpersist what it registered")
+    // a failed Memo.value build is evicted: the next caller retries
+    var attempts = 0
+    def flaky() = Memo.value(spark, "memo_spec_value_fail", "nodir") {
+      attempts += 1
+      if (attempts == 1) throw new RuntimeException("planted value failure")
+      attempts
+    }
+    val e = intercept[RuntimeException](flaky())
+    assert(e.getMessage == "planted value failure",
+      "the caller sees the build's own exception")
+    assert(flaky() == 2 && flaky() == 2 && attempts == 2,
+      "one retry, then the rebuilt value is served")
     Memo.clear(spark)
   }
 
@@ -230,23 +250,34 @@ class MemoSpec extends AnyFunSuite {
     val d = Files.createTempDirectory("graft_memo_race").toString
     Seq(1L, 2L, 3L, 4L).toDF("x").write.parquet(d + "/t.parquet")
     val builds = new AtomicInteger(0)
+    val valueBuilds = new AtomicInteger(0)
     val gate = new java.util.concurrent.CountDownLatch(1)
     def load() = Memo.cachedEager(spark, "memo_spec_race", d) {
       builds.incrementAndGet()
       spark.read.parquet(d + "/t.parquet")
     }
+    // the same race on a Memo.value cell holding a plain value
+    def loadValue() = Memo.value(spark, "memo_spec_race_value", d) {
+      valueBuilds.incrementAndGet()
+      spark.read.parquet(d + "/t.parquet").count()
+    }
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration._
     implicit val ec: ExecutionContext = ExecutionContext.global
     // 8 threads released simultaneously into the same key — the memo
-    // cell must serialize them onto ONE build (the parallel Memo.fill
-    // chains race exactly like this on documents_par/embeddings_par)
+    // cell must serialize them onto ONE build (the concurrent Memo.fill
+    // threads race exactly like this on documents_par/embeddings_par)
     val fs = (1 to 8).map(_ => Future { gate.await(); load() })
+    val vs = (1 to 8).map(_ => Future { gate.await(); loadValue() })
     gate.countDown()
     val dfs = fs.map(f => Await.result(f, 2.minutes))
+    val counts = vs.map(f => Await.result(f, 2.minutes))
     assert(builds.get() == 1, s"expected exactly one build, got ${builds.get()}")
     assert(dfs.forall(_ eq dfs.head), "all callers must see the same instance")
     assert(dfs.head.count() == 4)
+    assert(valueBuilds.get() == 1,
+      s"expected exactly one value build, got ${valueBuilds.get()}")
+    assert(counts.forall(_ == 4L))
     Memo.clear(spark)
   }
 }

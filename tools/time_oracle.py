@@ -40,65 +40,19 @@ def main():
     if len(sys.argv) > 4:  # optional regex filter, like selfcheck.py
         pat = re.compile(sys.argv[4])
         oracle = {k: v for k, v in oracle.items() if pat.search(k)}
-    # ORACLE_LANES: run the suite in N concurrent lanes (cursors on
-    # the one database, sharing its thread pool) — graft.Bench passes
-    # its own lane count here so the published ratio compares equal
-    # methodologies (engine lanes share one Spark scheduler the same
-    # way). duckdb releases the GIL during execution; each cursor
-    # serializes its own queries. Lanes=1 is the old sequential walk.
-    lanes = max(1, int(os.environ.get("ORACLE_LANES", "1")))
     times = {}
-
-    def run_one(name, cur):
+    for name in sorted(oracle):
         t0 = time.time()
         if staged and staged.search(name):
-            selfcheck.run_staged(cur, oracle[name])
+            selfcheck.run_staged(con, oracle[name])
         else:
-            cur.sql(oracle[name]).fetchall()
+            con.sql(oracle[name]).fetchall()
         times[name] = time.time() - t0
         # stream per-query lines so a long big-sf run shows progress;
-        # ONE atomic write (line + newline together): lanes>1 prints
-        # from several threads, and print()'s separate newline write
-        # can interleave mid-line, garbling the captured log that
-        # Bench now parses for per-query oracle walls
-        sys.stdout.write(f"{times[name]:9.2f}  {name}\n")
-        sys.stdout.flush()
-
-    names = sorted(oracle)
-    t_wall = time.time()
-    if lanes == 1:
-        for name in names:
-            run_one(name, con)
-        total = sum(times.values())  # == wall, kept for continuity
-    else:
-        import queue as _q
-        import threading
-        work = _q.SimpleQueue()
-        for name in names:
-            work.put(name)
-        errs = []
-
-        def drain():
-            cur = con.cursor()
-            while True:
-                try:
-                    name = work.get_nowait()
-                except _q.Empty:
-                    return
-                try:
-                    run_one(name, cur)
-                except Exception as e:  # surface, don't hang the join
-                    errs.append((name, e))
-        threads = [threading.Thread(target=drain) for _ in range(lanes)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errs:
-            raise errs[0][1]
-        total = time.time() - t_wall  # wall across lanes, like Bench
-    print(f"ORACLE_TOTAL={total:.1f} N={len(times)} sf={sfdir} lanes={lanes}",
-          flush=True)
+        # Bench parses them for per-query oracle walls
+        print(f"{times[name]:9.2f}  {name}", flush=True)
+    total = sum(times.values())
+    print(f"ORACLE_TOTAL={total:.1f} N={len(times)} sf={sfdir}", flush=True)
 
 
 if __name__ == "__main__":
