@@ -224,7 +224,9 @@ object Bench {
     * from stage metrics — zero on a healthy in-memory run, nonzero
     * under deliberate memory-pressure probes (§8g). `queryErrors` is
     * the root cause of every failed query; a failed query has no
-    * entry in `results` or `builds`. */
+    * entry in `results` or `builds`. `compiles` is the classes each
+    * query compiled ([[timeQueries]]) and `compilesTotal` the suite's,
+    * memo fill included. */
   def detailLine(total: Double, results: Seq[(String, Double)], sfDir: String,
                  fills: Seq[(String, Double)] = Nil,
                  calib: Option[Calib] = None,
@@ -236,7 +238,9 @@ object Bench {
                  oracleQueries: Seq[(String, Double)] = Nil,
                  spillBy: Seq[(String, (Long, Long))] = Nil,
                  builds: Seq[(String, Double)] = Nil,
-                 queryErrors: Map[String, String] = Map.empty): String = {
+                 queryErrors: Map[String, String] = Map.empty,
+                 compiles: Seq[(String, Long)] = Nil,
+                 compilesTotal: Long = 0): String = {
     val qs = results.map { case (k, v) => jsonStr(k) + ":" + v }
       .mkString("{", ",", "}")
     val fl = fills.map { case (k, v) => jsonStr(k) + ":" + v }
@@ -272,7 +276,9 @@ object Bench {
       else builds.map { case (k, v) => jsonStr(k) + ":" + v }
         .mkString(""""build":{""", ",", "},")
     val qe = errorsJson(queryErrors.toSeq.sortBy(_._1))
-    s"""{"metric":"total","value":$total,"unit":"sec",$cal$sp$spb${oracleJson(total, oracle)}"queries":$qs,$bd$qe,"fills":$fl,"fill_errors":$fe,"delta":$dl,"fill_overlap":$ov,"oracle_queries":$oq,"sf":${jsonStr(sfDir)}}"""
+    val cg = compiles.map { case (k, v) => jsonStr(k) + ":" + v }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":$total,"unit":"sec",$cal$sp$spb${oracleJson(total, oracle)}"queries":$qs,$bd$qe,"codegen_compiles":$cg,"codegen_compiles_total":$compilesTotal,"fills":$fl,"fill_errors":$fe,"delta":$dl,"fill_overlap":$ov,"oracle_queries":$oq,"sf":${jsonStr(sfDir)}}"""
   }
 
   /** Run the DuckDB oracle suite (tools/time_oracle.py, the driver-
@@ -283,15 +289,11 @@ object Bench {
     * the bench line simply omits the ratio fields (the oracle is a
     * denominator, never a reason to fail a bench). Opt out with
     * SPARK_GRAFT_BENCH_ORACLE=0 (e.g. at sf10, where the oracle
-    * needs a capacity-tuned staged run — see tools/selfcheck.py). */
-  def timeOracle(sfDir: String, threads: Int,
-                 boundSec: Long = 7200): Option[Double] =
-    timeOracleDetailed(sfDir, threads, boundSec).map(_._1)
-
-  /** [[timeOracle]] plus the per-query oracle walls parsed from the
-    * tool's streamed progress lines (`<sec>  <name>`) — the detail
-    * artifact publishes them so the 2× suite gate decomposes into
-    * per-query ratios without a second oracle run. */
+    * needs a capacity-tuned staged run — see tools/selfcheck.py).
+    * Also returns the per-query oracle walls parsed from the tool's
+    * streamed progress lines (`<sec>  <name>`) — the detail artifact
+    * publishes them so the 2× suite gate decomposes into per-query
+    * ratios without a second oracle run. */
   def timeOracleDetailed(sfDir: String, threads: Int,
                          boundSec: Long = 7200)
       : Option[(Double, Seq[(String, Double)])] = {
@@ -401,29 +403,46 @@ object Bench {
       Upsert.queries.keySet
   }
 
+  /** Classes Janino has compiled in this JVM so far: every miss of
+    * Spark's generated-class cache. A warm pass over a repeated
+    * workload adds zero (the cache is sized in
+    * [[GraftSession.builder]]); the per-query and suite deltas in the
+    * detail artifact show a return of cache thrash. */
+  private[graft] def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+
+  /** One successfully timed query: its start stamp (drives the
+    * fill-overlap flag), build and wall seconds (wall − build is
+    * execution) and the classes compiled while it ran. */
+  private[graft] final case class Timed(name: String, startNanos: Long,
+                                        build: Double, wall: Double,
+                                        compiles: Long)
+
   /** Time each query in order on the calling thread: build the
-    * DataFrame, then run it in full into the `noop` sink. Returns
-    * (name, startNanos, buildSeconds, wallSeconds) per query that
-    * succeeded — the start stamp drives the fill-overlap flag, and
-    * wall − build is execution — plus the root cause (class, message,
-    * top frame) of every query that failed, whose wall is no
-    * timing. */
+    * DataFrame, then run it in full into the `noop` sink. Returns a
+    * [[Timed]] per query that succeeded, plus the root cause (class,
+    * message, top frame) of every query that failed, whose wall is
+    * no timing. The compile count is a JVM-wide delta, so a query
+    * that overlaps the memo fill also counts the fill's compiles. */
   private[graft] def timeQueries(
       spark: org.apache.spark.sql.SparkSession, sfDir: String,
       qs: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame)])
-      : (Seq[(String, Long, Double, Double)], Map[String, String]) = {
+      : (Seq[Timed], Map[String, String]) = {
     val errors = Map.newBuilder[String, String]
     val timed = qs.flatMap { case (name, build) =>
       // thread-local label (guide §1.5): the UI and the spill
       // listener attribute this query's stages to it
       spark.sparkContext.setJobDescription(s"q:$name")
+      val c0 = codegenCompiles
       val t0 = System.nanoTime()
       try {
         val df = build(spark, sfDir)
         val tb = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
-        Some((name, t0, (tb - t0) / 1e9, (System.nanoTime() - t0) / 1e9))
+        Some(Timed(name, t0, (tb - t0) / 1e9, (System.nanoTime() - t0) / 1e9,
+          codegenCompiles - c0))
       } catch { case t: Throwable =>
         val cause = Memo.describe(t)
         System.err.println(s"[bench] query '$name' FAILED — $cause")
@@ -482,6 +501,7 @@ object Bench {
     val (light, heavy) = SparkEntry.queries.toSeq.sortBy(_._1)
       .partition { case (n, _) => lightQueries.contains(n) }
     val wallT0 = System.nanoTime()
+    val compiles0 = codegenCompiles
     val fillEnd = new java.util.concurrent.atomic.AtomicLong(Long.MaxValue)
     // DAEMON fill thread + explicit shutdown: the default
     // newSingleThreadExecutor thread is non-daemon and was never shut
@@ -506,14 +526,13 @@ object Bench {
     fillPool.shutdown()
     val (heavyResults, heavyErrors) = timeQueries(spark, sfDir, heavy)
     val queryErrors = lightErrors ++ heavyErrors
-    val timedAll = (lightResults ++ heavyResults).sortBy(_._1)
-    val results = timedAll.map { case (n, _, _, s) => (n, s) }
-    val builds = timedAll.map { case (n, _, b, _) => (n, b) }
+    val compilesTotal = codegenCompiles - compiles0
+    val timedAll = (lightResults ++ heavyResults).sortBy(_.name)
+    val results = timedAll.map(t => (t.name, t.wall))
     // every query whose timed window BEGAN before the fill phase
     // finished shared CPUs with fill work — flag it so its wall is
     // never misread as a plan regression (round-12 verdict item 1)
-    val overlapped = timedAll.collect {
-      case (n, t0, _, _) if t0 < fillEnd.get => n }
+    val overlapped = timedAll.filter(_.startNanos < fillEnd.get).map(_.name)
     val total = (System.nanoTime() - wallT0) / 1e9
     // listener events are posted asynchronously; drain the bus so the
     // last stage's metrics are in the snapshot
@@ -529,8 +548,9 @@ object Bench {
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
       detailLine(total, results, sfDir, fills, calib, Memo.fillErrors,
         deltaMap(results, prev), Some(spill.snapshot), oracle,
-        overlapped, oracleQueries, spill.topSpillers(16), builds,
-        queryErrors) + "\n")
+        overlapped, oracleQueries, spill.topSpillers(16),
+        timedAll.map(t => (t.name, t.build)), queryErrors,
+        timedAll.map(t => (t.name, t.compiles)), compilesTotal) + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}") }
     Memo.clear(spark)

@@ -119,6 +119,27 @@ object GraftSession {
       // them out to interpreted per-row evaluation (~10-30× slower on
       // the hot map stage). 200 covers every plan in this engine.
       .config("spark.sql.codegen.maxFields", "200")
+      // generated-class cache (static: read once per JVM, when
+      // CodeGenerator first initializes). The default 100 entries is
+      // below any repeated workload here: the 12 memo-free OLAP/ETL
+      // bench queries compile 102 distinct classes and 7 LLM-data
+      // queries 119, so the cache evicts in a loop and every pass
+      // recompiles ~100 classes with Janino, each restarting in the
+      // JVM interpreter. One pass of all 240 queries at sf0.01
+      // compiles 2,742 classes; 8192 holds the whole suite, so a warm
+      // pass compiles nothing.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
+      // the cache keys on the generated source, and by default the
+      // whole-stage class name carries the plan's codegen stage id.
+      // AQE numbers stages in the order they are re-planned, so the
+      // same pipeline got a new id, and a new compile, on later runs:
+      // at sf0.01 the second and third passes of all 240 queries
+      // recompiled 217 and 98 classes. Without the id: 16 and 9 (the
+      // rest are plans that really differ between runs), and the
+      // first pass compiles 2,742 instead of 3,459, since identical
+      // pipelines in different queries now share one class. The id
+      // stays in the formatted code's comment and the plan's `*(n)`.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // partitioned-table listing: above this many child dirs Spark
       // dispatches a DISTRIBUTED listing job — right for object
       // storage on a real cluster, pure job-launch overhead on a

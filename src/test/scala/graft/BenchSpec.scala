@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * window truncated its head. The contract under test: the stdout
   * line is COMPACT (total only, hard size bound) and the per-query
   * detail lives only in the BENCH_OUT.json file copy. */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends AnyFunSuite with TempDirs {
 
   private val manyQueries =
     (1 to 100).map(i => s"some_quite_long_query_name_$i" -> i * 0.123456789)
@@ -109,7 +109,7 @@ class BenchSpec extends AnyFunSuite {
   test("delta map against a synthetic prior artifact flags regressions") {
     // a synthetic prior BENCH_OUT: one faster query, one slower, one
     // removed; current adds one brand-new query
-    val prior = java.nio.file.Files.createTempFile("bench_prev", ".json")
+    val prior = java.nio.file.Paths.get(tempDir("bench_prev"), "prev.json")
     java.nio.file.Files.writeString(prior,
       """{"metric":"total","value":9.9,"unit":"sec",""" +
         """"queries":{"q_a":1.0,"q_b":2.5,"q_gone":3.0},"sf":"/x/sf0.1"}""" + "\n")
@@ -199,14 +199,14 @@ class BenchSpec extends AnyFunSuite {
         throw new IllegalStateException("planted build error")),
       "exec_fails" -> ((s, _) =>
         s.range(1).selectExpr("raise_error('planted exec error') AS y"))))
-    assert(timed.map(_._1) == Seq("ok_query"),
+    assert(timed.map(_.name) == Seq("ok_query"),
       "a failed query's wall must not be published as a timing")
     assert(errors.keySet == Set("build_fails", "exec_fails"))
     assert(errors("build_fails").startsWith(
       "java.lang.IllegalStateException: planted build error at "),
       s"class, message and top frame expected: ${errors("build_fails")}")
     assert(errors("exec_fails").contains("planted exec error"))
-    val results = timed.map { case (n, _, _, w) => n -> w }
+    val results = timed.map(t => t.name -> t.wall)
     val detail = Bench.detailLine(1.0, results, "/x/sf0.1",
       queryErrors = errors)
     assert(detail.contains(""""query_errors":{"build_fails":"java.lang.IllegalStateException: planted build error"""))
@@ -221,6 +221,22 @@ class BenchSpec extends AnyFunSuite {
     assert(line.getBytes("UTF-8").length < 600, s"line too long: $line")
     assert(line.endsWith(""""sf":0.1}"""))
     assert(!Bench.compactLine(1.0, "/x/sf0.1").contains("failed"))
+  }
+
+  test("each timed query carries its codegen compiles; a rerun compiles none") {
+    val spark = TestSession.spark
+    // a literal unseen in this JVM makes the generated source new
+    val salt = System.nanoTime()
+    val q: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame =
+      (s, _) => s.range(100).selectExpr(s"id * $salt + 1 AS y").where("y % 7 = 0")
+    val (first, _) = Bench.timeQueries(spark, TestSession.sf, Seq("q" -> q))
+    val (again, _) = Bench.timeQueries(spark, TestSession.sf, Seq("q" -> q))
+    assert(first.head.compiles > 0, "a new plan must compile")
+    assert(again.head.compiles == 0, "a cached plan must not recompile")
+    val detail = Bench.detailLine(1.0, Seq("q" -> 0.5), "/x/sf0.1",
+      compiles = Seq("q" -> 3L), compilesTotal = 7L)
+    assert(detail.contains(""""codegen_compiles":{"q":3},"codegen_compiles_total":7,"""))
   }
 
   test("light queries construct without creating a memo cell") {

@@ -3,14 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Compaction
-import java.nio.file.Files
 
-class CompactionSpec extends AnyFunSuite {
+class CompactionSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   val sf = TestSession.sf
 
   test("compaction merges a many-file directory preserving content exactly") {
-    val dir = Files.createTempDirectory("graft_compact").toString + "/events"
+    val dir = tempDir("graft_compact") + "/events"
     // simulate a streaming sink: 20 tiny appends
     val ev = Tables.events(spark, sf).select("event_id", "value")
     (0 until 20).foreach { i =>
@@ -36,7 +35,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("file sink with checkpoint: stop/resume is exactly-once") {
-    val base = Files.createTempDirectory("graft_sink").toString
+    val base = tempDir("graft_sink")
     val (in, out, cp) = (s"$base/in", s"$base/out", s"$base/cp")
     val ev = Tables.events(spark, sf).select("event_id", "event_type", "value")
     ev.filter(col("event_id") < 200).write.mode("append").parquet(in)
@@ -60,7 +59,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("file-based streaming source processes new files incrementally") {
-    val dir = Files.createTempDirectory("graft_filestream").toString + "/in"
+    val dir = tempDir("graft_filestream") + "/in"
     val ev = Tables.events(spark, sf).select("event_id", "event_type", "value")
     ev.filter(col("event_id") < 100).write.mode("append").parquet(dir)
     val stream = spark.readStream

@@ -3,16 +3,15 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Layout
-import java.nio.file.Files
 
 /** Range-sorted layout: files must cover pairwise-disjoint ranges of
   * the layout column (the property footer-stats pruning relies on). */
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   val sf = TestSession.sf
 
   test("writeRangeSorted produces files with disjoint l_shipdate ranges") {
-    val dir = Files.createTempDirectory("graft_layout").toString + "/li"
+    val dir = tempDir("graft_layout") + "/li"
     Layout.writeRangeSorted(
       Tables.lineitem(spark, sf).select("l_orderkey", "l_shipdate"),
       dir, "l_shipdate", 8)
@@ -37,7 +36,7 @@ class LayoutSpec extends AnyFunSuite {
   test("generated day-partition layout preserves results and prunes date scans") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val dir = Files.createTempDirectory("graft_partlayout").toString
+    val dir = tempDir("graft_partlayout")
     graft.tools.GenScale.generate(spark, sf, dir, 1, partitioned = true)
     // the generated layout column is invisible: readers see the flat
     // layout's exact logical schema
@@ -115,7 +114,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("z-order keeps both dimensions prunable; single-column sort only one") {
-    val base = Files.createTempDirectory("graft_zorder").toString
+    val base = tempDir("graft_zorder")
     val ev = Tables.events(spark, sf)
       .select(col("user_id"),
         (col("value") * 100).cast("long").as("v100"))

@@ -1,18 +1,17 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** The cross-query intermediate cache must key by dataset directory —
   * a keying regression would silently serve one dataset's cached
   * relation to queries over another. */
-class MemoSpec extends AnyFunSuite {
+class MemoSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
 
   test("memo entries are isolated per (key, dir) and reused per dir") {
     import spark.implicits._
-    val d1 = Files.createTempDirectory("graft_memo1").toString
-    val d2 = Files.createTempDirectory("graft_memo2").toString
+    val d1 = tempDir("graft_memo1")
+    val d2 = tempDir("graft_memo2")
     Seq(1L, 2L).toDF("x").write.parquet(d1 + "/t.parquet")
     Seq(10L, 20L, 30L).toDF("x").write.parquet(d2 + "/t.parquet")
     def load(dir: String) =
@@ -26,7 +25,7 @@ class MemoSpec extends AnyFunSuite {
 
   test("clear unpersists and drops session entries; rebuild works") {
     import spark.implicits._
-    val d = Files.createTempDirectory("graft_memo_clear").toString
+    val d = tempDir("graft_memo_clear")
     Seq(1L, 2L, 3L).toDF("x").write.parquet(d + "/t.parquet")
     var builds = 0
     def load() = Memo.cached(spark, "memo_spec_clear", d) {
@@ -152,7 +151,7 @@ class MemoSpec extends AnyFunSuite {
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration._
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val d = Files.createTempDirectory("graft_memo_slow").toString
+    val d = tempDir("graft_memo_slow")
     Seq(1L, 2L).toDF("x").write.parquet(d + "/t.parquet")
     val started = new java.util.concurrent.CountDownLatch(1)
     val hold = new java.util.concurrent.CountDownLatch(1)
@@ -247,7 +246,7 @@ class MemoSpec extends AnyFunSuite {
   test("concurrent cachedEager callers build a shared key exactly once") {
     import spark.implicits._
     import java.util.concurrent.atomic.AtomicInteger
-    val d = Files.createTempDirectory("graft_memo_race").toString
+    val d = tempDir("graft_memo_race")
     Seq(1L, 2L, 3L, 4L).toDF("x").write.parquet(d + "/t.parquet")
     val builds = new AtomicInteger(0)
     val valueBuilds = new AtomicInteger(0)

@@ -3,16 +3,15 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{ReferencePipeline, RunLog}
-import java.nio.file.Files
 
 /** End-to-end parity with the reference's run() loop: one call lands
   * the validated hour-deduped batch idempotently and logs the run. */
-class ReferencePipelineSpec extends AnyFunSuite {
+class ReferencePipelineSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   val sf = TestSession.sf
 
   test("pipeline cycle lands the batch once (all-valid feed => success); re-run => skipped") {
-    val base = Files.createTempDirectory("graft_pipeline").toString
+    val base = tempDir("graft_pipeline")
     val target = base + "/grid_telemetry"
     val logDir = base + "/etl_runs"
     val expected = ReferencePipeline.insertBatch(spark, sf).count()
@@ -39,7 +38,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
   }
 
   test("validation failures => partial run record, valid subset still lands") {
-    val base = Files.createTempDirectory("graft_pipeline_part").toString
+    val base = tempDir("graft_pipeline_part")
     // a feed with PLANTED quality failures — the reference's `partial`
     // trigger (etl_job.py:213-218): out-of-range values + unknown type
     val corrupted = Tables.events(spark, sf)
@@ -69,7 +68,7 @@ class ReferencePipelineSpec extends AnyFunSuite {
   }
 
   test("terminal failure is logged before propagating") {
-    val base = Files.createTempDirectory("graft_pipeline_fail").toString
+    val base = tempDir("graft_pipeline_fail")
     intercept[Throwable] {
       ReferencePipeline.run(spark, "/nonexistent_sf_dir", base + "/t",
         base + "/runs", maxAttempts = 2, baseDelayMs = 1)

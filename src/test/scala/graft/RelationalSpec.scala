@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.RelationalOps
 
-class RelationalSpec extends AnyFunSuite {
+class RelationalSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   val sf = TestSession.sf
 
@@ -88,7 +88,7 @@ class RelationalSpec extends AnyFunSuite {
     // split, so rewrite the two tables as multi-file copies first (at
     // 100 TB there are thousands of mappers; this is the test-scale
     // stand-in, not a query change)
-    val multi = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val multi = tempDir("graft_skew")
     Tables.lineitem(spark, sf).repartition(8)
       .write.parquet(multi + "/lineitem.parquet")
     Tables.orders(spark, sf).repartition(4)

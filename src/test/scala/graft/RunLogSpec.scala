@@ -3,14 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.RunLog
-import java.nio.file.Files
 
-class RunLogSpec extends AnyFunSuite {
+class RunLogSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   val sf = TestSession.sf
 
   test("timed records success and failure runs; report aggregates them") {
-    val dir = Files.createTempDirectory("graft_runlog").toString + "/runs"
+    val dir = tempDir("graft_runlog") + "/runs"
     val n = RunLog.timed(spark, dir, "daily_rollup") {
       graft.operators.EtlOps.dailyCleanliness(spark, sf)
     }
@@ -31,7 +30,7 @@ class RunLogSpec extends AnyFunSuite {
   }
 
   test("timedWithRetries retries transient failures and logs every attempt") {
-    val dir = Files.createTempDirectory("graft_retry").toString + "/runs"
+    val dir = tempDir("graft_retry") + "/runs"
     var calls = 0
     val expected = Tables.region(spark, sf).count()
     val n = RunLog.timedWithRetries(spark, dir, "flaky", maxAttempts = 3,

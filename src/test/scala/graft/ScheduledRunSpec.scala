@@ -2,7 +2,6 @@ package graft
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.functions._
@@ -18,7 +17,7 @@ import graft.tools.ScheduledRun
   * bit-identical to v=1) — the idempotence the reference gets from
   * its per-hour existence check, proven through the whole fetch →
   * upsert → rollup chain. */
-class ScheduledRunSpec extends AnyFunSuite {
+class ScheduledRunSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   val sf = TestSession.sf
 
@@ -28,7 +27,7 @@ class ScheduledRunSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
 
   test("two identical cycles: second is a logged no-op, state stable, maintained ≡ recomputed") {
-    val wh = Files.createTempDirectory("graft_schedrun").toString
+    val wh = tempDir("graft_schedrun")
 
     val r1 = ScheduledRun.cycle(spark, sf, wh)
     assert(r1.inserted > 0, "first cycle lands the batch")
@@ -66,7 +65,7 @@ class ScheduledRunSpec extends AnyFunSuite {
     })
     server.start()
     try {
-      val wh = Files.createTempDirectory("graft_schedrun_live").toString
+      val wh = tempDir("graft_schedrun_live")
       val url = s"http://127.0.0.1:${server.getAddress.getPort}/feed"
       val r = ScheduledRun.cycle(spark, sf, wh, Some(url))
       assert(r.fetched == 1)

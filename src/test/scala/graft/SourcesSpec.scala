@@ -2,16 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** §2.H — source/sink coverage: parquet (primary), csv, json,
   * partitioned writes. Round-trips preserve row counts and values. */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   val sf = TestSession.sf
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft_$name").toString
+    tempDir(s"graft_$name")
 
   test("csv round-trip preserves orders") {
     val o = Tables.orders(spark, sf)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.{StreamCdc, StreamSessionize, StreamingOps}
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
   val sf = TestSession.sf
@@ -368,7 +368,7 @@ class StreamingSpec extends AnyFunSuite {
   test("stream_sessionize: RocksDB state survives stop + restart") {
     implicit val sqlCtx = spark.sqlContext
     import StreamSessionize.{EvIn, SessionOut}
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sess_ckpt").toString
+    val ckpt = tempDir("graft_sess_ckpt")
     val out = scala.collection.mutable.ListBuffer.empty[(Long, Long, Long, Double)]
     val mem = MemoryStream[EvIn]
     def t(s: String) = java.sql.Timestamp.valueOf(s)
@@ -419,7 +419,7 @@ class StreamingSpec extends AnyFunSuite {
   test("stream_cdc: RocksDB state survives stop + restart (stale changes stay dead)") {
     implicit val sqlCtx = spark.sqlContext
     import StreamCdc.{ChangeIn, CurrentOut}
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ckpt").toString
+    val ckpt = tempDir("graft_cdc_ckpt")
     val out = scala.collection.mutable.ListBuffer.empty[(Long, String, Option[Double])]
     val mem = MemoryStream[ChangeIn]
     def t(s: String) = java.sql.Timestamp.valueOf(s)

@@ -3,17 +3,16 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{EtlOps, Upsert}
-import java.nio.file.Files
 
 /** The reference's write-path semantics (etl_job.py:224-274):
   * check-then-insert keyed on the hour — a re-run of the same data
   * must insert ZERO duplicate hour keys. */
-class UpsertSpec extends AnyFunSuite {
+class UpsertSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   val sf = TestSession.sf
 
   test("upsertByKey inserts only absent hour keys; re-runs are no-ops") {
-    val target = Files.createTempDirectory("graft_upsert").toString + "/telemetry"
+    val target = tempDir("graft_upsert") + "/telemetry"
     val full = EtlOps.dedupHour(spark, sf)
     val batch1 = full.filter(hour(col("hour_ts")) < 12)
 
@@ -35,7 +34,7 @@ class UpsertSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream_upsert").toString
+    val base = tempDir("graft_stream_upsert")
     val target = base + "/t"
     val mem = MemoryStream[(Long, String)]
     val q = mem.toDF().toDF("k", "v")
@@ -56,7 +55,7 @@ class UpsertSpec extends AnyFunSuite {
   }
 
   test("upsertByKeyLogged records inserted counts per run") {
-    val base = Files.createTempDirectory("graft_upsert_log").toString
+    val base = tempDir("graft_upsert_log")
     val target = base + "/telemetry"
     val logDir = base + "/runs"
     val full = EtlOps.dedupHour(spark, sf)
