@@ -35,7 +35,7 @@ import scala.collection.concurrent.TrieMap
 object Memo {
   /** One atomically-inserted cell per key, holding a
     * CompletableFuture SLOT rather than building under a monitor:
-    * the build (and any eager materialization) runs EXACTLY once —
+    * the build (with its materialization) runs EXACTLY once —
     * losers of the start CAS await the winner's slot instead of
     * building an equivalent value a second time (a duplicate
     * `persist` leaks a CacheManager entry; a duplicate store
@@ -98,7 +98,7 @@ object Memo {
     /** Mark the cell cleared and release a finished build —
       * NON-BLOCKING. An in-flight or never-started build is marked
       * dead so it releases itself on completion; a failed build holds
-      * nothing (cachedEager's catch block undid its persist). */
+      * nothing ([[cached]]'s catch block undid its persist). */
     def drop(): Unit = {
       dead = true
       if (slot.isDone && !slot.isCompletedExceptionally) release(slot.join())
@@ -215,20 +215,20 @@ object Memo {
   def value[T](s: SparkSession, key: String, dir: String)(build: => T): T =
     getOrBuild[T]((s, key, dir), _ => ())(build)
 
-  /** A [[value]] holding a persisted DataFrame, unpersisted on
-    * [[clear]]. */
+  /** A [[value]] holding a persisted DataFrame, materialized inside
+    * the build and unpersisted on [[clear]]. The build persists at
+    * MEMORY_AND_DISK and runs ONE job into the `noop` sink before the
+    * cell's slot completes, so every reader — a concurrent fill, a
+    * query, both sides of one query's self-join — waits on the slot
+    * until the blocks exist. A lazy cache would let a concurrent
+    * reader plan over blocks not yet written, and a consumer that
+    * references the relation more than once would have its
+    * concurrent stages each miss the cache and race into duplicate
+    * recomputes of the build plan. The `noop` write runs the build
+    * plan once into the cache and discards the rows: `count()` would
+    * add a single-partition exchange and a second job. */
   def cached(s: SparkSession, key: String, dir: String)
             (build: => DataFrame): DataFrame =
-    getOrBuild[DataFrame]((s, key, dir), _.unpersist())(
-      build.persist(StorageLevel.MEMORY_AND_DISK))
-
-  /** Like [[cached]] but the first call materializes the cache before
-    * returning. For intermediates a SINGLE query references more than
-    * once (e.g. both sides of a self-join): the consumer's concurrent
-    * stages would otherwise each miss the lazy cache and race into
-    * duplicate recomputes of the build plan. */
-  def cachedEager(s: SparkSession, key: String, dir: String)
-                 (build: => DataFrame): DataFrame =
     getOrBuild[DataFrame]((s, key, dir), _.unpersist()) {
       val df = build.persist(StorageLevel.MEMORY_AND_DISK)
       // a failed materialization must undo the persist() it already
@@ -236,15 +236,15 @@ object Memo {
       // would never find this entry to unpersist — the CacheManager
       // leak the Cell design otherwise closes (Memo.fill deliberately
       // tolerates failed fills, so this path is reachable)
-      try df.foreach(_ => ())
+      try df.write.format("noop").mode("overwrite").save()
       catch { case t: Throwable => df.unpersist(); throw t }
       df
     }
 
-  /** Live memo cells owned by `s` (spec hook). */
-  private[graft] def cellCount(s: SparkSession): Int = {
+  /** Keys of the live memo cells owned by `s` (spec hook). */
+  private[graft] def keys(s: SparkSession): Set[String] = {
     import scala.jdk.CollectionConverters._
-    m.keySet.asScala.count(_._1 eq s)
+    m.keySet.asScala.collect { case (o, k, _) if o eq s => k }.toSet
   }
 
   /** Materialize every shared memoized value for `dir`. Returns

@@ -641,14 +641,16 @@ object AnnOps {
   private[graft] def ivfImpl(e0: DataFrame, queries: DataFrame,
                              nCells: Int, nProbe: Int,
                              trainPerCell: Int = TrainPerCell): DataFrame = {
-    // cached: referenced by the sample filter and the assignment pass
-    val e = Tables.parallelize(e0).cache()
+    // checkpointed: referenced by the sample filter and the assignment
+    // pass. Registered checkpoints, not bare .cache(): Memo.clear
+    // releases them, and a plain SQL cache would outlive it.
+    val e = graft.Checkpoints.eager(Tables.parallelize(e0))
     val n = e.count()
     val cells =
       if (nCells > 0) nCells
       else math.max(4, math.sqrt(n.toDouble).toInt)
     val train = trainSample(e, n, cells, trainPerCell)
-    val cents = coarseCentsFromTrain(train, cells).cache()
+    val cents = graft.Checkpoints.eager(coarseCentsFromTrain(train, cells))
     ivfScore(coarseAssign(e, cents), cents, queries, nProbe)
   }
 
@@ -692,17 +694,17 @@ object AnnOps {
     * binary-signature and covariance relations over the base corpus)
     * — consumed by [[graft.Memo.fill]]. */
   private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
-    "ann_train" -> (() => { annTrain(s, d).count(); () }),
-    "ann_cents" -> (() => { annCents(s, d).count(); () }),
-    "ann_assigned" -> (() => { annAssigned(s, d).count(); () }),
-    "ann_trainres" -> (() => { annTrainRes(s, d).count(); () }),
-    "ann_pqcents" -> (() => { annPqCents(s, d).count(); () }),
-    "ann_pqcodes" -> (() => { annPqCodes(s, d).count(); () }),
-    "pq_cents" -> (() => { pqSoloCents(s, d).count(); () }),
-    "pq_codes" -> (() => { pqSoloCodes(s, d).count(); () }),
-    "sq8_codes" -> (() => { sq8Codes(s, d).count(); () }),
-    "bin_sigs" -> (() => { binSigs(s, d).count(); () }),
-    "cov_base" -> (() => { covarianceBase(s, d).count(); () }))
+    "ann_train" -> (() => { annTrain(s, d); () }),
+    "ann_cents" -> (() => { annCents(s, d); () }),
+    "ann_assigned" -> (() => { annAssigned(s, d); () }),
+    "ann_trainres" -> (() => { annTrainRes(s, d); () }),
+    "ann_pqcents" -> (() => { annPqCents(s, d); () }),
+    "ann_pqcodes" -> (() => { annPqCodes(s, d); () }),
+    "pq_cents" -> (() => { pqSoloCents(s, d); () }),
+    "pq_codes" -> (() => { pqSoloCodes(s, d); () }),
+    "sq8_codes" -> (() => { sq8Codes(s, d); () }),
+    "bin_sigs" -> (() => { binSigs(s, d); () }),
+    "cov_base" -> (() => { covarianceBase(s, d); () }))
 
   // ---- shared SQL mirror builders (ONE copy each: the ivf/pq/ivfpq
   // ---- mirrors must stay bit-identical, so the deterministic-fold
@@ -933,13 +935,14 @@ object AnnOps {
     * then the exact re-score covers everything and the result must
     * equal brute force rank-for-rank. */
   private[graft] def pqImpl(e0: DataFrame, queries: DataFrame, shortK: Int): DataFrame = {
-    // cached: feeds the training sample, the encode pass and the
-    // shortlist re-score. Sample bounded by TrainPerCell·PqCells
-    // (PQ needs concentration per sub-centroid, not per √N cell).
-    val e = Tables.parallelize(e0).cache()
+    // checkpointed (as in ivfImpl): feeds the training sample, the
+    // encode pass and the shortlist re-score. Sample bounded by
+    // TrainPerCell·PqCells (PQ needs concentration per sub-centroid,
+    // not per √N cell).
+    val e = graft.Checkpoints.eager(Tables.parallelize(e0))
     val n = e.count()
     val train = trainSample(e, n, PqCells, TrainPerCell)
-    val pcents = pqCentsFromTrain(train).cache()
+    val pcents = graft.Checkpoints.eager(pqCentsFromTrain(train))
     val codes = pqEncode(e, pcents)
     // ADC over the WHOLE code table (no coarse pruning — that's
     // ann_ivfpq): every corpus vector scores against the broadcast
@@ -1202,7 +1205,8 @@ object AnnOps {
                                nCells: Int, nProbe: Int, shortK: Int,
                                trainPerCell: Int = TrainPerCell,
                                residual: Boolean = true): DataFrame = {
-    val e = Tables.parallelize(e0).cache()
+    // checkpointed, as in ivfImpl
+    val e = graft.Checkpoints.eager(Tables.parallelize(e0))
     val n = e.count()
     val cells =
       if (nCells > 0) nCells
@@ -1211,20 +1215,21 @@ object AnnOps {
     // coarse quantizer: identical construction to ann_ivf; sub-
     // quantizers: identical construction to ann_pq but trained on
     // the (larger) IVF sample — on residuals for the default path
-    val cents = coarseCentsFromTrain(train, cells).cache()
-    // cached: both branches consume the full-corpus assignment twice
+    val cents = graft.Checkpoints.eager(coarseCentsFromTrain(train, cells))
+    // checkpointed: both branches consume the full-corpus assignment twice
     // (cell lookup + residual/code build) — uncached, the
     // O(N·cells·d) assignment pass would run once per consumer on
     // this spec-driven path (the memoized ivfpq entry point already
     // reuses ann_assigned; round-7 ADVICE)
-    val assignedFull = coarseAssign(e, cents).cache()
+    val assignedFull = graft.Checkpoints.eager(coarseAssign(e, cents))
     if (residual) {
-      val pcents = pqCentsFromTrain(trainResiduals(train, cents)).cache()
+      val pcents = graft.Checkpoints.eager(
+        pqCentsFromTrain(trainResiduals(train, cents)))
       val codes = pqEncode(corpusResiduals(assignedFull, cents), pcents)
       ivfpqResScore(assignedFull.select("vec_id", "cell_id"), codes, pcents,
         e, cents, queries, nProbe, shortK)
     } else {
-      val pcents = pqCentsFromTrain(train).cache()
+      val pcents = graft.Checkpoints.eager(pqCentsFromTrain(train))
       val codes = pqEncode(e, pcents)
       ivfpqScore(assignedFull.select("vec_id", "cell_id"), codes, pcents,
         e, cents, queries, nProbe, shortK)

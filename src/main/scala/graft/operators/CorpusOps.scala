@@ -30,10 +30,10 @@ object CorpusOps {
     }
 
   /** This family's shared memoized relation (the cluster map) —
-    * consumed by [[graft.Memo.fill]]. Dedup fills run first, so the
-    * pair set this builds on is already warm. */
+    * consumed by [[graft.Memo.fill]]. The pair set it builds on is
+    * the `ngram_jaccard` cell, which this fill awaits or builds. */
   private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
-    "dedup_clusters" -> (() => { clusters(s, d).count(); () }))
+    "dedup_clusters" -> (() => { clusters(s, d); () }))
 
   /** Edge count below which the component resolution collapses to a
     * driver-side union-find: O(E α(E)) on one core beats ~diameter

@@ -877,13 +877,10 @@ object DedupOps {
     * references it on BOTH sides, and without materialization each
     * side re-runs the full token-scan + 64-sum aggregation (the
     * expensive part of this operator — ~4× the work for the same
-    * answer). The fill is EAGER (foreach) because the join's two
-    * scan stages run concurrently on first use — both would miss the
-    * lazy cache and race into the recompute. n_docs × 16 bytes
-    * cached is nothing at any scale; on a cluster a pipeline would
-    * land signatures once and fan out. */
+    * answer). n_docs × 16 bytes cached is nothing at any scale; on a
+    * cluster a pipeline would land signatures once and fan out. */
   private def simhashSigsMemo(s: SparkSession, d: String): DataFrame =
-    graft.Memo.cachedEager(s, "simhash_sigs", d)(
+    graft.Memo.cached(s, "simhash_sigs", d)(
       simhashSignaturesFromTokens(VocabOps.docTokens(s, d)
         .select(col("doc_id"), col("token").as("tok"))))
 
@@ -1284,13 +1281,13 @@ object DedupOps {
     * scans (documents_par, embeddings_par) and the dedup candidate
     * chains — consumed by [[graft.Memo.fill]]. */
   private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
-    "documents_par" -> (() => { docsParallel(s, d).count(); () }),
-    "embeddings_par" -> (() => { embParallel(s, d).count(); () }),
-    "shingle_sets" -> (() => { shingleSets(s, d).count(); () }),
-    "ngram_inter" -> (() => { ngramInter(s, d).count(); () }),
-    "ngram_jaccard" -> (() => { ngramJaccard(s, d).count(); () }),
-    "minhash_banded" -> (() => { minhashBanded(s, d).count(); () }),
-    "minhash_cand" -> (() => { minhashCandidates(s, d).count(); () }),
+    "documents_par" -> (() => { docsParallel(s, d); () }),
+    "embeddings_par" -> (() => { embParallel(s, d); () }),
+    "shingle_sets" -> (() => { shingleSets(s, d); () }),
+    "ngram_inter" -> (() => { ngramInter(s, d); () }),
+    "ngram_jaccard" -> (() => { ngramJaccard(s, d); () }),
+    "minhash_banded" -> (() => { minhashBanded(s, d); () }),
+    "minhash_cand" -> (() => { minhashCandidates(s, d); () }),
     "simhash_sigs" -> (() => { simhashSigsMemo(s, d); () }))
 
   /** Memo-cached parallelized scans shared across the dedup/ANN
@@ -1310,8 +1307,10 @@ object DedupOps {
     // copy per call). The gate is an EXPLICIT caller contract, not
     // inferred from storageLevel: a cached-but-single-partition
     // input would otherwise silently run the whole LSH chain on one
-    // partition. Raw inputs get parallelized and cached here.
-    val e = if (inputPrepared) e0 else Tables.parallelize(e0).cache()
+    // partition. Raw inputs get parallelized and checkpointed here
+    // (a registered checkpoint: Memo.clear releases it, where a plain
+    // SQL cache would stay in the CacheManager).
+    val e = if (inputPrepared) e0 else graft.Checkpoints.eager(Tables.parallelize(e0))
     val banded = e
       .select(col("vec_id"),
         explode(lshBuckets(col("embedding"), tables, bits, 64)).as("b"))

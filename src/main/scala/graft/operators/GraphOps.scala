@@ -35,9 +35,8 @@ object GraphOps {
     * build pays. The explicit `repartition(okey)` (not the distinct's
     * implicit hash(okey, sk) exchange) is what makes that true:
     * HashPartitioning(okey) satisfies the dedup aggregate's
-    * ClusteredDistribution(okey, sk), survives the checkpoint into
-    * the LogicalRDD leaf, and matches the join keys downstream —
-    * previously the distinct exchanged on (okey, sk) and every
+    * ClusteredDistribution(okey, sk) and matches the join keys
+    * downstream — previously the distinct exchanged on (okey, sk) and every
     * consumer re-exchanged by okey (2 extra full-relation shuffles at
     * sf10), while bipartite_pairs shuffled raw lineitem separately. */
   private[graft] def orderSuppsRaw(s: SparkSession, d: String): DataFrame =
@@ -47,9 +46,7 @@ object GraphOps {
       .dropDuplicates("okey", "sk")
 
   private[graft] def orderSupps(s: SparkSession, d: String): DataFrame =
-    graft.Memo.cached(s, "order_supps", d) {
-      orderSuppsRaw(s, d).transform(graft.Checkpoints.eager)
-    }
+    graft.Memo.cached(s, "order_supps", d)(orderSuppsRaw(s, d))
 
   /** DISTINCT customer↔supplier co-occurrence pairs through
     * orders⋈lineitem (node ids: 2·custkey / 2·suppkey+1 — disjoint
@@ -69,9 +66,7 @@ object GraphOps {
       .distinct()
 
   private[graft] def bipartitePairs(s: SparkSession, d: String): DataFrame =
-    graft.Memo.cached(s, "bipartite_pairs", d) {
-      bipartitePairsRaw(s, d).transform(graft.Checkpoints.eager)
-    }
+    graft.Memo.cached(s, "bipartite_pairs", d)(bipartitePairsRaw(s, d))
 
   /** Customer↔supplier PageRank (3 unrolled iterations).
     *
@@ -309,18 +304,16 @@ object GraphOps {
   /** This family's shared memoized relations — consumed by
     * [[graft.Memo.fill]]. */
   private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
-    "order_supps" -> (() => { orderSupps(s, d).count(); () }),
-    "assoc_edges" -> (() => { assocEdges(s, d).count(); () }),
-    "bipartite_pairs" -> (() => { bipartitePairs(s, d).count(); () }))
+    "order_supps" -> (() => { orderSupps(s, d); () }),
+    "assoc_edges" -> (() => { assocEdges(s, d); () }),
+    "bipartite_pairs" -> (() => { bipartitePairs(s, d); () }))
 
   /** Canonical top-K association edge set (u < v, deduped,
-    * localCheckpointed) — shared by the triangle census and the
+    * memo-cached) — shared by the triangle census and the
     * degree distribution; memoized so the co-occurrence join runs
     * once per dataset per process. */
   private[graft] def assocEdges(s: SparkSession, d: String): DataFrame =
-    graft.Memo.cached(s, "assoc_edges", d) {
-      assocEdgesRaw(s, d).transform(graft.Checkpoints.eager)
-    }
+    graft.Memo.cached(s, "assoc_edges", d)(assocEdgesRaw(s, d))
 
   private[graft] def assocEdgesRaw(s: SparkSession, d: String): DataFrame = {
       // the shared okey-partitioned projection (see [[orderSupps]]):

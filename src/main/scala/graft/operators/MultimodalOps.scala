@@ -524,8 +524,8 @@ object MultimodalOps {
     * verdict built over it, and the phash cluster map. */
   private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
     "media_feats" -> (() => { mediaFeatsMemo(s, d); () }),
-    "mm_semantic" -> (() => { mmSemantic(s, d).count(); () }),
-    "phash_clusters" -> (() => { phashClusters(s, d).count(); () }))
+    "mm_semantic" -> (() => { mmSemantic(s, d); () }),
+    "phash_clusters" -> (() => { phashClusters(s, d); () }))
 
   /** Perceptual media CLUSTERS — the keep/drop verdict over the
     * phash pair graph (connected components, smallest id kept):
@@ -799,7 +799,7 @@ object MultimodalOps {
     * [[mmSemantic]] are projections of it, so a pipeline decodes the
     * media corpus exactly once however many dedup passes run. */
   private[graft] def mediaFeatsMemo(s: SparkSession, d: String): DataFrame =
-    graft.Memo.cachedEager(s, "media_feats", d)(
+    graft.Memo.cached(s, "media_feats", d)(
       mediaFeatsFromDocs(DedupOps.docsParallel(s, d)))
 
   /** Media SEMANTIC near-dup over an arbitrary (doc_id, text-payload)

@@ -25,10 +25,10 @@ object VocabOps {
     * whole vocab/doc family fans out from; token_freq and doc_tf are
     * the two aggregate granularities consumers re-derive most. */
   private[graft] def memoFills(s: SparkSession, d: String): Seq[(String, () => Unit)] = Seq(
-    "doc_toks" -> (() => { docToks(s, d).count(); () }),
-    "token_freq" -> (() => { tokenFreq(s, d).count(); () }),
-    "doc_tf" -> (() => { docTf(s, d).count(); () }),
-    "lm_scores" -> (() => { lmScore(s, d).count(); () }),
+    "doc_toks" -> (() => { docToks(s, d); () }),
+    "token_freq" -> (() => { tokenFreq(s, d); () }),
+    "doc_tf" -> (() => { docTf(s, d); () }),
+    "lm_scores" -> (() => { lmScore(s, d); () }),
     "bpe_chain" -> (() => { bpeChain(s, d); () }))
 
   /** The tokenized corpus — (doc_id, lang, source, toks) with the

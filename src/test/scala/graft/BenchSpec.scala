@@ -248,7 +248,7 @@ class BenchSpec extends AnyFunSuite with TempDirs {
       .filter { case (n, _) => Bench.lightQueries(n) }
     assert(light.size == Bench.lightQueries.size && light.size > 100)
     val owners = light.collect { case (n, build)
-        if { build(spark, TestSession.sf); Memo.cellCount(spark) > 0 } =>
+        if { build(spark, TestSession.sf); Memo.keys(spark).nonEmpty } =>
       Memo.clear(spark); n }
     assert(owners.isEmpty, s"light queries that own memo cells: $owners")
   }

@@ -10,7 +10,7 @@ import graft.operators.DedupFeatureStore
 /** The persisted dedup feature store: cross-session round trip,
   * replay idempotence, frozen-blocklist discipline, re-sent-id
   * supersession, bucket-pruned fold scans, compaction, run bases. */
-class DedupStoreSpec extends AnyFunSuite {
+class DedupStoreSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -43,7 +43,7 @@ class DedupStoreSpec extends AnyFunSuite {
       Option(r.get(3)).map(_.asInstanceOf[Double]))).toSet
 
   test("store round trip: a fresh load sees prior folds (cross-session re-crawl)") {
-    val path = "/tmp/graft_spec_store_rt"
+    val path = tempDir("graft_spec_store_rt")
     val seed = Seq((1L, words(1, 30)), (2L, words(2, 30))).toDF("doc_id", "text")
     val s1 = DedupFeatureStore.build(seed, path)
     // batch A folds a new doc 101 into the store
@@ -63,7 +63,7 @@ class DedupStoreSpec extends AnyFunSuite {
 
   test("generation fence: a concurrent fold of the same generation is " +
     "refused; the first fold's data survives intact") {
-    val path = "/tmp/graft_spec_store_fence"
+    val path = tempDir("graft_spec_store_fence")
     val seed = Seq((1L, words(1, 30)), (2L, words(2, 30))).toDF("doc_id", "text")
     val store = DedupFeatureStore.build(seed, path)
     val batch = Seq((301L, words(9, 30))).toDF("doc_id", "text")
@@ -100,7 +100,7 @@ class DedupStoreSpec extends AnyFunSuite {
 
   test("replay idempotence: re-folding a generation neither changes " +
       "the verdict nor duplicates features") {
-    val path = "/tmp/graft_spec_store_replay"
+    val path = tempDir("graft_spec_store_replay")
     val seed = Seq((1L, words(1, 30)), (2L, words(2, 30))).toDF("doc_id", "text")
     val store = DedupFeatureStore.build(seed, path)
     val batch = Seq((100L, words(2, 30).replace("tok5", "edit5")),
@@ -133,9 +133,9 @@ class DedupStoreSpec extends AnyFunSuite {
       (1000L + b * 10L, words(50 + b, 30)),                      // fresh
       (2000L + b * 10L, words(1, 30).replace("tok4", s"e$b")))   // near of seed
       .toDF("doc_id", "text")
-    val auto = DedupFeatureStore.build(seedDocs, "/tmp/graft_spec_store_autoc")
+    val auto = DedupFeatureStore.build(seedDocs, tempDir("graft_spec_store_autoc"))
     auto.autoCompactMaxGens = 3
-    val plain = DedupFeatureStore.build(seedDocs, "/tmp/graft_spec_store_autoc0")
+    val plain = DedupFeatureStore.build(seedDocs, tempDir("graft_spec_store_autoc0"))
     plain.autoCompactMaxGens = 0
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
@@ -157,7 +157,7 @@ class DedupStoreSpec extends AnyFunSuite {
 
   test("frozen blocklist: a shingle frequent in the SEED is excluded " +
       "from every later batch's features") {
-    val path = "/tmp/graft_spec_store_freq"
+    val path = tempDir("graft_spec_store_freq")
     // 120 seed docs all containing the bigram "hot pepper" → its seed
     // df (120) exceeds MaxDf (100) → frozen into the blocklist; each
     // doc also has a unique tail so docs aren't near-dups of each other
@@ -186,9 +186,9 @@ class DedupStoreSpec extends AnyFunSuite {
     val v0 = words(21, 30)
     val v1 = v0.replace("tok4", "edit4").replace("tok8", "edit8")
     val v2 = v1.replace("tok12", "edit12")
+    val path = tempDir("graft_spec_store_resent")
     val store = DedupFeatureStore.build(
-      Seq((1L, v0), (2L, words(22, 30))).toDF("doc_id", "text"),
-      "/tmp/graft_spec_store_resent")
+      Seq((1L, v0), (2L, words(22, 30))).toDF("doc_id", "text"), path)
     // gen 0 re-sends doc 1 edited: the crawl semantics — it verdicts
     // against its OWN earlier version
     val own = store.fold(Seq((1L, v1)).toDF("doc_id", "text"), 0L)
@@ -197,7 +197,7 @@ class DedupStoreSpec extends AnyFunSuite {
       "a re-sent edited doc matches its own earlier version")
     val masks = spark.read
       .schema("doc_id long, old_gen long, ingest_gen long")
-      .parquet("/tmp/graft_spec_store_resent/resent")
+      .parquet(s"$path/resent")
       .select("doc_id", "old_gen", "ingest_gen").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(masks == Set((1L, -1L, 0L)), "gen 0 masked doc 1's seed version")
@@ -205,7 +205,7 @@ class DedupStoreSpec extends AnyFunSuite {
     store.fold(Seq((1L, v2)).toDF("doc_id", "text"), 1L).collect()
     val masks2 = spark.read
       .schema("doc_id long, old_gen long, ingest_gen long")
-      .parquet("/tmp/graft_spec_store_resent/resent")
+      .parquet(s"$path/resent")
       .select("doc_id", "old_gen", "ingest_gen").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(masks2 == Set((1L, -1L, 0L), (1L, 0L, 1L)))
@@ -218,7 +218,7 @@ class DedupStoreSpec extends AnyFunSuite {
     val got = verdictRows(store.verdict(probe, 2L))
     val control = DedupFeatureStore.build(
       Seq((1L, v2), (2L, words(22, 30))).toDF("doc_id", "text"),
-      "/tmp/graft_spec_store_resent_ctl")
+      tempDir("graft_spec_store_resent_ctl"))
     assert(got == verdictRows(control.verdict(probe, 0L)),
       "verdict through superseded generations == verdict against " +
         "a store that only ever held the latest versions")
@@ -229,7 +229,7 @@ class DedupStoreSpec extends AnyFunSuite {
 
   test("fold scans are bucket-pruned: the executed per-fold plan reads " +
       "a strict subset of the base's store files") {
-    val path = "/tmp/graft_spec_store_prune"
+    val path = tempDir("graft_spec_store_prune")
     // 300 seed docs spread shingle/band hashes over all store buckets
     val seed = (1L to 300L).map(i => (i, words(i.toInt, 24)))
       .toDF("doc_id", "text")
@@ -299,7 +299,7 @@ class DedupStoreSpec extends AnyFunSuite {
 
   test("compactGenerations: verdicts invariant, superseded rows and " +
       "masks physically retired, generation dirs collapse") {
-    val path = "/tmp/graft_spec_store_compact"
+    val path = tempDir("graft_spec_store_compact")
     val v0 = words(41, 30)
     val v1 = v0.replace("tok4", "edit4").replace("tok9", "edit9")
     val store = DedupFeatureStore.build(
@@ -343,7 +343,7 @@ class DedupStoreSpec extends AnyFunSuite {
   }
 
   test("refreshBlocklist is monotone and folds in drifted frequencies") {
-    val path = "/tmp/graft_spec_store_refresh"
+    val path = tempDir("graft_spec_store_refresh")
     // seed-frequent "hot pepper" enters the frozen blocklist, so its
     // shingle has ZERO persisted rows — the round-10 ADVICE defect was
     // a refresh recomputed from survivors alone silently dropping it
@@ -385,7 +385,7 @@ class DedupStoreSpec extends AnyFunSuite {
 
   test("runBase: a new run starts above every folded generation; a " +
       "checkpointed run keeps its base across restarts") {
-    val path = "/tmp/graft_spec_store_runbase"
+    val path = tempDir("graft_spec_store_runbase")
     val store = DedupFeatureStore.build(
       Seq((1L, words(61, 30))).toDF("doc_id", "text"), path)
     assert(store.maxGen == -1L)
@@ -407,7 +407,7 @@ class DedupStoreSpec extends AnyFunSuite {
     // a checkpointed run's base is pinned at first start: replays map
     // a batchId back to its original generation even after folds
     // advanced maxGen
-    val cp = Some("/tmp/graft_spec_store_runbase_cp")
+    val cp = Some(tempDir("graft_spec_store_runbase_cp"))
     val cb1 = store.runBase(cp)
     assert(cb1 == store.maxGen + 1)
     store.fold(Seq((300L, words(64, 30))).toDF("doc_id", "text"), cb1)

@@ -41,7 +41,7 @@ class MemoSpec extends AnyFunSuite with TempDirs {
     assert(builds == 1)
     assert(value() == 1 && value() == 1)
     Memo.clear(spark)
-    assert(Memo.cellCount(spark) == 0, "clear must drop every cell")
+    assert(Memo.keys(spark).isEmpty, "clear must drop every cell")
     assert(before.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "clear must unpersist cached entries")
     val after = load()
@@ -62,9 +62,16 @@ class MemoSpec extends AnyFunSuite with TempDirs {
       && names.contains("ann_cents") && names.contains("assoc_edges")
       && names.contains("doc_toks") && names.contains("token_freq")
       && names.contains("doc_tf"))
+    // every fill is named after the key it builds; the query-only keys
+    // have no fill of their own and are built by the fills that read
+    // them (the corpus count, the normalized-text hashes)
+    val queryOnly = Set("ann_n", "norm_hashes")
+    assert(Memo.keys(spark) == names.toSet ++ queryOnly,
+      "the keys left by a fill are the fill names plus the query-only keys")
     // second fill hits the memo: every thunk returns without a rebuild
     // (bounded as a sanity check, not a benchmark — the first fill
-    // runs whole LSH/k-means chains, the second only count()s caches)
+    // runs whole LSH/k-means chains, the second only reads filled
+    // cells)
     val t0 = System.nanoTime()
     val again = Memo.fill(spark, TestSession.sf)
     val dt = (System.nanoTime() - t0) / 1e9
@@ -95,6 +102,23 @@ class MemoSpec extends AnyFunSuite with TempDirs {
       "clear must unpersist the checkpoint RDD itself")
   }
 
+  test("clear leaves no CacheManager entry behind a spec-only ANN build") {
+    // the spec-only ANN entry points materialize their inputs through
+    // registered checkpoints: a plain SQL cache there is held by the
+    // CacheManager and survives Memo.clear. Start from an empty
+    // CacheManager (other suites' plain caches share this session).
+    Memo.clear(spark)
+    spark.catalog.clearCache()
+    val e = Tables.embeddings(spark, TestSession.sf)
+    val queries = e.filter("vec_id < 5")
+      .selectExpr("vec_id AS query_id", "embedding AS q_emb")
+    assert(graft.operators.AnnOps.ivfImpl(e, queries, nCells = 4, nProbe = 2)
+      .count() > 0)
+    Memo.clear(spark)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "Memo.clear must leave no SQL cache entry behind")
+  }
+
   test("a failed fill reports negative time and a visible root cause") {
     val boom = new RuntimeException("planted fill failure")
     val out = Memo.runFills(Seq(
@@ -117,7 +141,7 @@ class MemoSpec extends AnyFunSuite with TempDirs {
     import org.apache.spark.sql.functions.expr
     var captured: org.apache.spark.sql.DataFrame = null
     intercept[Throwable] {
-      Memo.cachedEager(spark, "memo_spec_fail", "nodir") {
+      Memo.cached(spark, "memo_spec_fail", "nodir") {
         captured = spark.range(2).toDF("x")
           .select(expr("raise_error('boom')").as("y"))
         captured
@@ -243,7 +267,7 @@ class MemoSpec extends AnyFunSuite with TempDirs {
     Memo.clear(spark)
   }
 
-  test("concurrent cachedEager callers build a shared key exactly once") {
+  test("concurrent cached callers build a shared key exactly once") {
     import spark.implicits._
     import java.util.concurrent.atomic.AtomicInteger
     val d = tempDir("graft_memo_race")
@@ -251,7 +275,7 @@ class MemoSpec extends AnyFunSuite with TempDirs {
     val builds = new AtomicInteger(0)
     val valueBuilds = new AtomicInteger(0)
     val gate = new java.util.concurrent.CountDownLatch(1)
-    def load() = Memo.cachedEager(spark, "memo_spec_race", d) {
+    def load() = Memo.cached(spark, "memo_spec_race", d) {
       builds.incrementAndGet()
       spark.read.parquet(d + "/t.parquet")
     }

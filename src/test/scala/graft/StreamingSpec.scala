@@ -506,10 +506,10 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     // base text lives ON DISK so the no-base-text-scan assertion has
     // a real path to catch: a regression back to re-shingling
     // batch ∪ base would put docsPath in the per-batch plan
-    val docsPath = "/tmp/graft_spec_ingest_docs"
+    val docsPath = tempDir("graft_spec_ingest_docs")
     base0Rows.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(docsPath)
-    val storePath = "/tmp/graft_spec_ingest_store"
+    val storePath = tempDir("graft_spec_ingest_store")
     val mem = MemoryStream[(Long, String)]
     val got = scala.collection.mutable.Map.empty[Long, Set[(Long, String, Long)]]
     val plans = scala.collection.mutable.Map.empty[Long, String]
@@ -527,7 +527,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
 
     // batch replay through a SECOND store: fold per batch, no stream
     val store2 = graft.operators.DedupFeatureStore.build(
-      spark.read.parquet(docsPath), "/tmp/graft_spec_ingest_store2")
+      spark.read.parquet(docsPath), tempDir("graft_spec_ingest_store2"))
     val want = Seq(batchA, batchB).zipWithIndex.map { case (b, i) =>
       store2.fold(b.toDF("doc_id", "text"), i.toLong)
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
